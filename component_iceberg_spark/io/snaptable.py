@@ -609,7 +609,11 @@ class SnapCatalog:
     (``ex-iceberg/src/component.py:148-157``), time-travel reads (``:38``).
     """
 
-    # -- deletion-vector apply gate (see _dv_apply_mode) -----------------
+    # -- deletion-vector apply plan (see _dv_apply_mode) -----------------
+    #
+    # Every DV's apply plan is decided ONCE, at write time, from the
+    # position/run stats the writer computes anyway, and stamped on the
+    # entry (``apply``); the read just switches on it.
     #
     # The broadcast membership probe (`array_contains`) costs O(rows ×
     # positions-per-file) comparisons per data file and broadcasts one
@@ -617,57 +621,44 @@ class SnapCatalog:
     # killers at dense density (a 2M-row file with 667k doomed ordinals
     # is ~10^12 comparisons, and a table-wide dense DV is a row-count-
     # sized broadcast payload that can OOM the driver). Above any of
-    # these thresholds the read explodes the DV into a (file, pos)
-    # anti-join instead: one hash exchange, linear work, no broadcast.
+    # these thresholds the DV is dense.
     DV_PROBE_MAX_DENSITY = 0.05          # doomed fraction of scoped rows
     DV_PROBE_MAX_FILE_POSITIONS = 8192   # per-file probe work bound
     DV_PROBE_MAX_TOTAL_POSITIONS = 2_000_000  # broadcast bytes bound (~16 MB)
-    # rewrite_deletes_to_dv write parallelism: one output task per this
-    # many folded positions (~32 MB of longs) — sparse folds keep the
-    # single-file layout, a large accreted backlog fans out
+    # positions-layout write parallelism: one output task per this many
+    # positions (~32 MB of longs) — sparse DVs keep the single-file
+    # layout, a large scattered DV or accreted backlog fans out
     DV_FOLD_POSITIONS_PER_TASK = 4_000_000
-    # a DENSE delete whose ordinals form few contiguous RUNS (the
-    # realistic dense shapes: time-range deletes, partition drops,
-    # compaction-era tombstones) can still broadcast — as (start, end)
-    # ranges, whose bytes and per-row probe work are RUN-count-bounded
-    # at any density. Above this many runs in one file, ranges stop
-    # compressing and the dense apply falls back to the anti-join; the
-    # TOTAL bound caps the broadcast payload across files (a band delete
-    # touching 100k files would otherwise broadcast 100k × per-file
-    # arrays — the same OOM vector the positions cap closes).
+    # a delete whose ordinals form few contiguous RUNS (time-range
+    # deletes, partition drops, compaction-era tombstones) stores
+    # (start, end) ranges, whose bytes and per-row probe work are
+    # RUN-count-bounded at any density. Above this many runs in one
+    # file ranges stop compressing; the TOTAL bound caps the broadcast
+    # payload across files (a band delete touching 100k files would
+    # otherwise broadcast 100k × per-file arrays — the same OOM vector
+    # the positions cap closes). A dense DV outside these bounds falls
+    # back to the (file, pos) anti-join: one hash exchange, linear
+    # work, no broadcast.
     DV_RANGE_PROBE_MAX_PER_FILE = 128
     DV_RANGE_PROBE_MAX_TOTAL_RANGES = 1_000_000  # ~16 MB of (start, end)
-    # prefer the range probe over the ordinal probe at ANY density once
-    # positions outnumber runs by this factor (contiguity beats density
-    # — the range probe's payload and per-row work are both run-bounded)
-    DV_RANGES_PREFER_FACTOR = 64
-    # STORAGE layout choice (r15, the Iceberg-v3 roaring-bitmap
-    # analogue): once positions outnumber runs by this factor AND the
-    # run counts fit the range-probe bounds, the DV file stores
-    # (file_path, starts, ends) directly — entry ``layout: "ranges"`` —
-    # instead of explicit ordinal arrays. Storage bytes drop from
-    # positions-sized to runs-sized, and the read applies the stored
-    # ranges with NO derivation pass. The factor is lower than the
-    # read-side prefer factor (8 vs 64) because storage pays the
-    # compression once at write time while the probe pays its shape on
-    # every read: at 8x the stored bytes already shrink 4x (two longs
-    # per run vs one per position), and any stored-ranges entry is
-    # forced through the ranges apply, which at >=8x is never worse
-    # than the ordinal probe. Requiring the probe bounds at WRITE time
-    # keeps the invariant that a ranges-layout entry is always
-    # broadcastable as-is.
+    # STORAGE layout choice (the Iceberg-v3 roaring-bitmap analogue):
+    # once positions outnumber runs by this factor (or the DV is dense)
+    # AND the run counts fit the range-probe bounds, the DV file stores
+    # (file_path, starts, ends) directly — entry ``layout: "ranges"``,
+    # ``apply: "ranges"`` — instead of explicit ordinal arrays. At 8x
+    # the stored bytes already shrink 4x (two longs per run vs one per
+    # position) and the range probe is never worse than the ordinal
+    # probe. Requiring the probe bounds keeps the invariant that a
+    # ranges-layout entry is always broadcastable as-is.
     DV_STORE_RANGES_FACTOR = 8
 
     def __init__(self, warehouse: str):
         self.warehouse = warehouse
         os.makedirs(warehouse, exist_ok=True)
-        # per-delete-file stat memo for pre-stamp DV entries (immutable
-        # files, so the cache can never go stale) — see _dv_apply_mode
-        self._legacy_dv_stats: dict[str, tuple[int, int]] = {}
         # per-data-dir footer bounds memo for pre-stamp (legacy/adopted)
-        # dirs — data dirs are immutable once published, same staleness
-        # argument as _legacy_dv_stats; dirs with an unreadable file are
-        # NOT cached (a repaired adopted link changes content without
+        # dirs — data dirs are immutable once published, so the cache
+        # can never go stale; dirs with an unreadable file are NOT
+        # cached (a repaired adopted link changes content without
         # changing the dir name) — see _dispatch_bounds / ADVICE r14 #3
         self._footer_bounds_cache: dict[tuple[str, str, str], list] = {}
 
@@ -1334,16 +1325,16 @@ class SnapCatalog:
         manifest = self._manifest(namespace, table, base)
         files = manifest["files"]
         deletes = manifest.get("deletes", [])
-        # dirs covered by a POSITIONAL delete entry must never fold:
-        # folding hard-links data files under new basenames, which would
-        # orphan the (file_path, pos) addresses the delete file stores.
-        # Each such dir gets a unique singleton signature so it is
-        # carried as-is (equality entries scope by dir name and survive
-        # folding; positional entries scope by file path and don't).
+        # dirs covered by a deletion vector must never fold: folding
+        # hard-links data files under new basenames, which would orphan
+        # the file paths the DV stores. Each such dir gets a unique
+        # singleton signature so it is carried as-is (equality entries
+        # scope by dir name and survive folding; DVs scope by file path
+        # and don't).
         pos_covered = {
             d
             for e in deletes
-            if e.get("mode") in ("positional", "dv")
+            if e.get("mode") == "dv"
             for d in e["applies_to"]
         }
         groups: dict[frozenset, list[str]] = {}
@@ -1437,7 +1428,7 @@ class SnapCatalog:
                 extra_schemas[nd] = src_schemas[0]
         remapped = []
         for i, e in enumerate(deletes):
-            if e.get("mode") in ("positional", "dv"):
+            if e.get("mode") == "dv":
                 # path-scoped dirs never fold (singleton signatures
                 # above), so the entry carries its surviving dirs
                 # unchanged
@@ -2071,28 +2062,47 @@ class SnapCatalog:
         real density (matched and total in the SAME job — the predicate
         reaches the parquet reader as a pushed filter), still small next
         to either delete's own work."""
+        verb, base = self._auto_verb(
+            spark, namespace, table, predicate, cow_density
+        )
+        if verb == "cow":
+            return self.delete_where(spark, namespace, table, predicate)
+        if verb == "mor":
+            return self.delete_where_mor(spark, namespace, table, predicate)
+        return base
+
+    def _auto_verb(
+        self,
+        spark: SparkSession,
+        namespace: str,
+        table: str,
+        predicate: str,
+        cow_density: float,
+    ) -> tuple[str | None, int]:
+        """The dispatch shared by :meth:`delete_where_auto` and
+        :meth:`update_where_auto`: returns ``(verb, base)`` where verb
+        is ``"cow"``, ``"mor"`` or None (nothing can match — the caller
+        returns ``base``, the current snapshot id)."""
         if not 0.0 < cow_density <= 1.0:
             raise ValueError(f"cow_density must be in (0, 1]: {cow_density}")
         base = self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, base)
         if self._pending_deletes(manifest, manifest["files"]):
-            return self.delete_where(spark, namespace, table, predicate)
+            return "cow", base
         candidates, _untouched = self._prune_dirs(manifest, predicate)
         if not candidates:
-            return base  # no dir can match: nothing to delete
+            return None, base  # no dir can match
         bounds = self._dispatch_bounds(
             namespace, table, manifest, candidates, predicate
         )
         if bounds is not None:
             lower, upper, total = bounds
             if upper == 0:
-                return base  # footer proof: no row can match
+                return None, base  # footer proof: no row can match
             if total and lower / total > cow_density:
-                return self.delete_where(spark, namespace, table, predicate)
+                return "cow", base
             if total and upper / total <= cow_density:
-                return self.delete_where_mor(
-                    spark, namespace, table, predicate
-                )
+                return "mor", base
         # bounds straddle the threshold (or can't run): measure — one
         # combined aggregate yields matched AND total in a single job
         scan = self._resolve_schema(
@@ -2107,12 +2117,12 @@ class SnapCatalog:
             F.count(F.lit(1)).alias("n"),
             F.count_if(F.expr(predicate)).alias("m"),
         ).first()
-        cand_rows, doomed_n = int(row["n"]), int(row["m"] or 0)
-        if doomed_n == 0:
-            return base
-        if cand_rows and doomed_n / cand_rows > cow_density:
-            return self.delete_where(spark, namespace, table, predicate)
-        return self.delete_where_mor(spark, namespace, table, predicate)
+        cand_rows, matched_n = int(row["n"]), int(row["m"] or 0)
+        if matched_n == 0:
+            return None, base
+        if cand_rows and matched_n / cand_rows > cow_density:
+            return "cow", base
+        return "mor", base
 
     def update_where(
         self,
@@ -2257,56 +2267,18 @@ class SnapCatalog:
         footer row-group bounds when they land decisively on one side of
         ``cow_density`` (one candidate-dir scan total — the chosen
         verb's own), one combined matched+total aggregate otherwise."""
-        if not 0.0 < cow_density <= 1.0:
-            raise ValueError(f"cow_density must be in (0, 1]: {cow_density}")
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        if self._pending_deletes(manifest, manifest["files"]):
+        verb, base = self._auto_verb(
+            spark, namespace, table, predicate, cow_density
+        )
+        if verb == "cow":
             return self.update_where(
                 spark, namespace, table, predicate, assignments
             )
-        candidates, _untouched = self._prune_dirs(manifest, predicate)
-        if not candidates:
-            return base  # no dir can match: nothing to update
-        bounds = self._dispatch_bounds(
-            namespace, table, manifest, candidates, predicate
-        )
-        if bounds is not None:
-            lower, upper, total = bounds
-            if upper == 0:
-                return base  # footer proof: no row can match
-            if total and lower / total > cow_density:
-                return self.update_where(
-                    spark, namespace, table, predicate, assignments
-                )
-            if total and upper / total <= cow_density:
-                return self.update_where_mor(
-                    spark, namespace, table, predicate, assignments
-                )
-        # bounds straddle the threshold (or can't run): measure — one
-        # combined aggregate yields matched AND total in a single job
-        scan = self._resolve_schema(
-            self._read_dirs(
-                spark, namespace, table, candidates,
-                bool(manifest.get("partition_by")),
-                read_schema=self._scan_schema(manifest),
-            ),
-            manifest,
-        )
-        row = scan.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_if(F.expr(predicate)).alias("m"),
-        ).first()
-        cand_rows, matched_n = int(row["n"]), int(row["m"] or 0)
-        if matched_n == 0:
-            return base
-        if cand_rows and matched_n / cand_rows > cow_density:
-            return self.update_where(
+        if verb == "mor":
+            return self.update_where_mor(
                 spark, namespace, table, predicate, assignments
             )
-        return self.update_where_mor(
-            spark, namespace, table, predicate, assignments
-        )
+        return base
 
     def delete_keys(
         self,
@@ -2353,8 +2325,8 @@ class SnapCatalog:
     ) -> DataFrame:
         """Scan exposing each row's physical address — (data file path,
         row ordinal within the file) as ``_pos_file``/``_pos_idx`` — the
-        handle a caller needs to author Iceberg-v2-style POSITIONAL
-        deletes (``delete_positions``). Addresses come from Spark's
+        handle a caller needs to author a deletion vector
+        (``delete_positions_dv``). Addresses come from Spark's
         ``_metadata.file_path``/``row_index`` hidden columns, so the
         scan stays fully distributed and adds no shuffle.
 
@@ -2382,200 +2354,47 @@ class SnapCatalog:
         hidden = [c for c in out.columns if c.startswith("_pt_")]
         return out.drop(*hidden) if hidden else out
 
-    def delete_positions(
-        self,
-        spark: SparkSession,
-        namespace: str,
-        table: str,
-        pos_df: DataFrame,
-    ) -> int:
-        """Merge-on-read POSITIONAL delete (the other Iceberg v2 delete
-        format, reference ex-iceberg's pyiceberg table contract: v2
-        tables carry equality deletes AND (file_path, pos) delete files
-        — the format compaction engines emit). ``pos_df`` carries the
-        doomed rows' physical addresses as ``_pos_file``/``_pos_idx``
-        (author them with ``read_with_positions``). The delete file is
-        written with Iceberg's positional-delete schema (file_path,
-        pos); the commit is metadata-only — no data rewrite.
-
-        Scoping is TIGHTER than ``delete_keys``: the entry records only
-        the data dirs the addresses actually touch (derived from the
-        file paths), so untouched dirs keep folding in
-        ``compact_manifests`` and their read groups never pay this
-        entry's anti-join. Positions are additionally physical — they
-        name files — so rows appended later can never be masked even
-        inside a scoped dir. Reads anti-join on (file, pos);
-        ``compact`` materializes and clears pending positional deletes
-        exactly like equality ones. ``compact_manifests`` never folds a
-        dir covered by a positional entry (folding hard-links data files
-        under new basenames, which would orphan the stored paths)."""
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        del_dir_name = f"posdelete-{uuid.uuid4().hex[:12]}"
-        out = self._tbl(namespace, table, "deletes", del_dir_name)
-        (
-            pos_df.select(
-                F.col(self.POS_FILE_COL).alias("file_path"),
-                F.col(self.POS_IDX_COL).cast("long").alias("pos"),
-            )
-            .distinct()
-            .coalesce(1)
-            .write.parquet(out)
-        )
-        # scope to the dirs the addresses actually TOUCH (derivable from
-        # the file paths for free), not every dir visible at delete
-        # time: untouched dirs stay foldable by compact_manifests and
-        # their read groups skip this entry's anti-join entirely. The
-        # dir-name extraction is representation-safe — commit dir names
-        # are uuid hex, never URI-escaped.
-        touched = {
-            r["d"]
-            for r in spark.read.parquet(out)
-            .select(
-                F.regexp_extract(
-                    F.col("file_path"), r"/data/([^/]+)/", 1
-                ).alias("d")
-            )
-            .distinct()
-            .collect()
-        }
-        entry = {
-            "dir": del_dir_name,
-            "mode": "positional",
-            "applies_to": sorted(
-                d for d in manifest["files"] if d in touched
-            ),
-        }
-        if not entry["applies_to"]:
-            # nothing addressed: don't publish a dead entry (and don't
-            # leave the empty delete file for orphan GC to chase)
-            shutil.rmtree(out, ignore_errors=True)
-            return base
-        try:
-            return self._commit(
-                namespace, table, None, operation="delete", carry=False,
-                base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), extra_deletes=[entry],
-            )
-        except CommitConflict:
-            shutil.rmtree(out, ignore_errors=True)  # no manifest refs it
-            raise
-
-    def compact_position_deletes(
-        self, spark: SparkSession, namespace: str, table: str
-    ) -> int:
-        """Iceberg ``rewrite_position_delete_files`` analogue: merge all
-        pending POSITIONAL delete files into one, dropping dead
-        addresses, without touching data files. Every streaming upsert /
-        CDC-style pipeline accretes small delete files; at read time
-        each costs one anti-join pass over its scoped group, so
-        maintenance folds them.
-
-        Two properties make the merge safe that would NOT hold for
-        equality entries: a positional address can only ever mask its
-        exact (file, ordinal) row, so (a) widening ``applies_to`` to the
-        union of the sources' scopes cannot mask later-appended rows
-        (their files are different), and (b) addresses whose file no
-        longer sits under a live scoped dir are DEAD — a CoW rewrite
-        already materialized them — and are dropped here. Equality
-        entries are semantic (key-scoped) and are carried unchanged.
-
-        No-op (returns the current snapshot id) with fewer than two
-        pending positional entries."""
-        base = self._current_sid(namespace, table)
-        manifest = self._manifest(namespace, table, base)
-        entries = manifest.get("deletes", [])
-        pos = [e for e in entries if e.get("mode") == "positional"]
-        if len(pos) < 2:
-            return base
-        keep = [e for e in entries if e.get("mode") != "positional"]
-        merged = None
-        for e in pos:
-            df = spark.read.parquet(
-                self._tbl(namespace, table, "deletes", e["dir"])
-            )
-            merged = df if merged is None else merged.unionByName(df)
-        # drop dead addresses: only files under a live scoped dir can
-        # still be masked. Match on the /data/<dirname>/ COMPONENT, not
-        # the absolute warehouse path: stored addresses are Spark
-        # _metadata URIs (file:…, percent-encoded), so an absolute-path
-        # substring silently misses on any warehouse path with
-        # URI-escaped characters and would drop LIVE addresses —
-        # dir names are uuid hex and never escape, so the component
-        # match is representation-safe (a false keep is harmless: the
-        # address simply never matches a scanned row).
-        scope = sorted({d for e in pos for d in e["applies_to"]})
-        live = [
-            F.col("file_path").contains(f"/data/{d}/") for d in scope
-        ]
-        alive = live[0]
-        for cond in live[1:]:
-            alive = alive | cond
-        del_dir_name = f"posdelete-{uuid.uuid4().hex[:12]}"
-        out = self._tbl(namespace, table, "deletes", del_dir_name)
-        merged.filter(alive).distinct().coalesce(1).write.parquet(out)
-        entry = {
-            "dir": del_dir_name,
-            "mode": "positional",
-            "applies_to": [d for d in scope if d in set(manifest["files"])],
-        }
-        try:
-            return self._commit(
-                namespace, table, None,
-                operation="rewrite_position_deletes",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), clear_deletes=True,
-                extra_deletes=keep + [entry],
-            )
-        except CommitConflict:
-            # no manifest references the merged file yet — sweep it
-            # (the compact_manifests link-dir discipline)
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-
     def _dv_write_relation(
         self,
         spark: SparkSession,
-        out: str,
-        pos_rel: DataFrame,
-        live_dirs: list[str],
         namespace: str,
         table: str,
-    ) -> tuple[list[str], dict, str | None]:
+        manifest: dict,
+        pos_rel: DataFrame,
+        live_dirs: list[str],
+    ) -> tuple[str, dict | None]:
         """Runs-first DV writer shared by every DV-authoring path
         (``_dv_write_entry`` per-statement, ``rewrite_deletes_to_dv``
         fold): ONE gaps-and-islands pass over the (file_path, pos)
         relation yields per-file run arrays plus the position/run stats
-        the read gate consumes — computed BEFORE any bytes land, so the
-        storage layout is chosen from the same numbers the apply gate
-        reads and nothing is ever written twice.
+        — computed BEFORE any bytes land, so the apply plan
+        (``_dv_apply_mode``) is decided once, here, the storage layout
+        follows from it, and nothing is ever written twice.
 
-        Layout choice (r15): positions >= ``DV_STORE_RANGES_FACTOR`` x
-        runs AND runs inside the range-probe bounds stores
-        ``(file_path, starts, ends)`` directly (``layout "ranges"`` —
-        runs-sized bytes, the Iceberg-v3 roaring-bitmap analogue; the
-        read applies it with no derivation pass). Otherwise the
-        explicit sorted ordinal form (``layout "positions"``), expanded
-        from the run arrays with vectorized ``sequence``/``flatten``
-        (positions < factor x runs bounds the per-row expansion).
+        Layout: an ``apply "ranges"`` entry stores ``(file_path, starts,
+        ends)`` directly (``layout "ranges"`` — runs-sized bytes, the
+        Iceberg-v3 roaring-bitmap analogue; the read broadcasts the
+        file as-is). ``probe`` and ``anti`` entries store the explicit
+        sorted ordinal form (``layout "positions"``), expanded from the
+        run arrays with vectorized ``sequence``/``flatten``.
 
         Write parallelism: the positions form fans out one task per
         ``DV_FOLD_POSITIONS_PER_TASK`` positions — the exact volume is
-        already known from the stats pass, so per-statement writes get
-        the same protection the fold got in r14 (a huge scattered DV no
-        longer serializes through one task). The ranges form is
-        run-bounded (<= ~16 MB by the probe caps) and keeps one file.
+        already known from the stats pass, so a huge scattered DV never
+        serializes through one task. The ranges form is run-bounded
+        (<= ~16 MB by the probe caps) and keeps one file.
 
         Plan cost: one shuffle total — the window's hash exchange on
         file_path also satisfies both downstream groupBys (subset
-        clustering), where the r14 flow paid the write shuffle AND a
-        second full pass for ``_dv_stats``. The file-count-sized runs
-        relation is localCheckpoint'ed so the stats aggregate and the
-        write both read it without recomputing the source scan (the
+        clustering). The file-count-sized runs relation is
+        localCheckpoint'ed so the stats aggregate and the write both
+        read it without recomputing the source scan (the
         ``update_where_mor`` one-evaluation discipline).
 
-        Returns ``(applies_to, stats, layout)``; layout None (nothing
-        written) when no position addresses a live dir."""
+        Returns ``(delete file path, stamped entry)``; the entry is None
+        (nothing written) when no position addresses a live dir."""
+        del_dir_name = f"dvdelete-{uuid.uuid4().hex[:12]}"
+        out = self._tbl(namespace, table, "deletes", del_dir_name)
         # duplicates would both split runs (the row_number offset jumps)
         # and inflate counts — dedup here so every caller is covered
         pos_rel = pos_rel.dropDuplicates(["file_path", "pos"])
@@ -2640,20 +2459,21 @@ class SnapCatalog:
         applies_to = sorted(d for d in live_dirs if d in touched)
         try:
             if not applies_to or stats["n_positions"] == 0:
-                return [], stats, None
-            if (
-                stats["n_ranges"] > 0
-                and stats["n_positions"]
-                >= self.DV_STORE_RANGES_FACTOR * stats["n_ranges"]
-                and stats["max_file_ranges"]
-                <= self.DV_RANGE_PROBE_MAX_PER_FILE
-                and stats["n_ranges"]
-                <= self.DV_RANGE_PROBE_MAX_TOTAL_RANGES
-            ):
+                return out, None
+            apply = self._dv_apply_mode(manifest, applies_to, stats)
+            entry = {
+                "dir": del_dir_name,
+                "mode": "dv",
+                "layout": "ranges" if apply == "ranges" else "positions",
+                "apply": apply,
+                "applies_to": applies_to,
+                **stats,
+            }
+            if apply == "ranges":
                 per_file.select("file_path", "starts", "ends").coalesce(
                     1
                 ).write.parquet(out)
-                return applies_to, stats, "ranges"
+                return out, entry
             tasks = max(
                 1,
                 -(-stats["n_positions"] // self.DV_FOLD_POSITIONS_PER_TASK),
@@ -2676,7 +2496,7 @@ class SnapCatalog:
                 else pos_out.coalesce(1)
             )
             pos_out.write.parquet(out)
-            return applies_to, stats, "positions"
+            return out, entry
         finally:
             # release the checkpointed blocks eagerly: for a scattered
             # DV the starts/ends arrays are effectively positions-sized
@@ -2715,30 +2535,17 @@ class SnapCatalog:
         """Write a DV delete file from (``POS_FILE_COL``,
         ``POS_IDX_COL``) rows and build its STAMPED manifest entry —
         the one authoring path ``delete_positions_dv`` and
-        ``update_where_mor`` share, so the position/run stats the read
-        gate consumes can never drift between writers. Returns
-        ``(delete file path, entry)``; entry is None (and nothing
-        written) when no live dir is addressed. The entry records the
-        storage ``layout`` (``_dv_write_relation``'s choice) so the
-        read side dispatches without inspecting file schemas."""
-        del_dir_name = f"dvdelete-{uuid.uuid4().hex[:12]}"
-        out = self._tbl(namespace, table, "deletes", del_dir_name)
+        ``update_where_mor`` share. Returns ``(delete file path,
+        entry)``; entry is None (and nothing written) when no live dir
+        is addressed."""
         pos_rel = pos_df.select(
             F.col(self.POS_FILE_COL).alias("file_path"),
             F.col(self.POS_IDX_COL).cast("long").alias("pos"),
         )
-        applies_to, stats, layout = self._dv_write_relation(
-            spark, out, pos_rel, list(manifest["files"]), namespace, table
+        return self._dv_write_relation(
+            spark, namespace, table, manifest, pos_rel,
+            list(manifest["files"]),
         )
-        if layout is None:
-            return out, None
-        return out, {
-            "dir": del_dir_name,
-            "mode": "dv",
-            "layout": layout,
-            "applies_to": applies_to,
-            **stats,
-        }
 
     def delete_positions_dv(
         self,
@@ -2747,33 +2554,32 @@ class SnapCatalog:
         table: str,
         pos_df: DataFrame,
     ) -> int:
-        """Merge-on-read DELETE as a DELETION VECTOR — the Iceberg v3 /
-        Delta-DV evolution of the positional delete file
-        (``delete_positions``): instead of one (file_path, pos) ROW per
-        doomed row, ONE row per touched data file carrying the sorted
-        int array of its deleted ordinals (the explicit-array form of
-        the roaring bitmap; this container has no roaring codec, and
-        the array keeps the entry a plain parquet value).
+        """Merge-on-read DELETE as a DELETION VECTOR — the Iceberg v3
+        path-scoped delete format, and this catalog's only one (equality
+        deletes, ``delete_keys``, are key-scoped). ``pos_df`` carries the
+        doomed rows' physical addresses as ``_pos_file``/``_pos_idx``
+        (author them with ``read_with_positions``). The DV stores ONE
+        row per touched data file — never one row per doomed row — so
+        the delete relation is file-count-sized at any density; the
+        commit is metadata-only, no data rewrite.
 
-        Why a third format: positional-file density is the failure mode
-        of the r11 format — a delete touching 1M rows of one file costs
-        1M delete ROWS and an anti-join whose build side is
-        row-count-sized. The DV entry for the same delete is ONE row
-        whose array is run-length-friendly parquet. The relation is
-        file-count-sized in ROWS but positions-sized in BYTES, so the
-        read-side apply is DENSITY-GATED (``_dv_apply_mode``): at
-        sparse density it broadcasts and rows probe their file's sorted
-        ordinal array with NO shuffle; at dense density (where the
-        probe's O(rows × positions-per-file) work and the broadcast
-        payload both blow up) the read explodes it back into a
-        (file, pos) anti-join. Writers stamp ``n_positions`` /
-        ``max_file_positions`` on the entry so the gate costs reads
-        nothing. Storage stays DV either way — the gate picks the apply
-        PLAN, not the format.
-        Same scoping, folding, and maintenance contracts as positional
-        entries: scoped to touched dirs, never folded by
-        ``compact_manifests``, materialized + cleared by ``compact``,
-        rewritten by ``rewrite_deletes_to_dv``."""
+        The writer measures positions and runs before any bytes land
+        and decides the read's apply plan once (``_dv_apply_mode``,
+        stamped as ``apply``): a shuffle-free broadcast probe of sorted
+        ordinal arrays at sparse density, a broadcast range probe over
+        stored ``(starts, ends)`` runs when the ordinals are contiguous
+        or dense-but-few-runs, and a (file, pos) anti-join when dense
+        and scattered.
+
+        Scoping: the entry records only the data dirs the addresses
+        actually touch, so untouched dirs keep folding in
+        ``compact_manifests`` and their read groups never pay this
+        entry's apply; positions name FILES, so rows appended later are
+        never masked, even inside a scoped dir. DV-covered dirs are
+        never folded by ``compact_manifests`` (folding hard-links files
+        under new basenames, orphaning the stored paths); ``compact``
+        materializes and clears DVs like equality entries;
+        ``rewrite_deletes_to_dv`` folds several into one."""
         base = self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, base)
         out, entry = self._dv_write_entry(
@@ -2794,93 +2600,72 @@ class SnapCatalog:
     def rewrite_deletes_to_dv(
         self, spark: SparkSession, namespace: str, table: str
     ) -> int:
-        """Maintenance: fold EVERY pending path-scoped delete entry —
-        r11 positional files and existing DVs alike — into ONE deletion
-        vector, dropping dead addresses, without touching data files
-        (the DV-era successor of ``compact_position_deletes``: same
-        dead-address and scope-union contracts, but the output is the
-        one-row-per-file format, so k accreted delete files collapse to
-        ONE entry and the read side goes from k apply passes to one —
-        a shuffle-free broadcast probe at sparse density, a single
-        anti-join at dense density; the folded entry carries the
-        position stats the gate reads, see ``_dv_apply_mode``).
+        """Maintenance (Iceberg ``rewrite_position_delete_files``
+        analogue): fold every pending deletion vector into ONE, dropping
+        dead addresses, without touching data files. Every streaming
+        upsert / CDC-style pipeline accretes small delete files, each
+        costing the read one apply pass; after the fold the read pays
+        one, and the folded entry is re-planned and re-stamped by the
+        shared writer (an accreted backlog of band deletes folds into a
+        runs-sized ``ranges`` entry).
 
-        Address-level safety is identical to the positional fold: a
-        (file, ordinal) can only mask its exact row, so unioning scopes
-        masks nothing new, and addresses whose file no longer lives
-        under a scoped dir are dead (a CoW rewrite materialized them) —
-        dropped here. Equality entries are semantic and carried
-        unchanged. No-op when there is nothing to fold (no path-scoped
-        entries, or already exactly one DV)."""
+        Two properties make the merge safe that would NOT hold for
+        equality entries: a (file, ordinal) address can only ever mask
+        its exact row, so (a) widening ``applies_to`` to the union of
+        the sources' scopes cannot mask later-appended rows (their files
+        are different), and (b) addresses whose file no longer sits
+        under a live scoped dir are DEAD — a CoW rewrite already
+        materialized them — and are dropped here. Equality entries are
+        semantic (key-scoped) and are carried unchanged. No-op with
+        fewer than two pending DVs."""
         base = self._current_sid(namespace, table)
         manifest = self._manifest(namespace, table, base)
         entries = manifest.get("deletes", [])
-        pos = [e for e in entries if e.get("mode") in ("positional", "dv")]
-        if not pos or (len(pos) == 1 and pos[0]["mode"] == "dv"):
+        dvs = [e for e in entries if e.get("mode") == "dv"]
+        if len(dvs) < 2:
             return base
-        keep = [e for e in entries if e.get("mode") not in ("positional", "dv")]
+        keep = [e for e in entries if e.get("mode") != "dv"]
         merged = None
-        for e in pos:
-            df = spark.read.parquet(
-                self._tbl(namespace, table, "deletes", e["dir"])
+        for e in dvs:
+            df = self._dv_positions_relation(
+                spark.read.parquet(
+                    self._tbl(namespace, table, "deletes", e["dir"])
+                ),
+                e["layout"],
             )
-            if e["mode"] == "dv":
-                df = self._dv_positions_relation(
-                    df, e.get("layout", "positions")
-                )
             merged = df if merged is None else merged.unionByName(df)
-        # dead-address drop: same representation-safe /data/<dir>/
-        # component match as compact_position_deletes
-        scope = sorted({d for e in pos for d in e["applies_to"]})
+        # drop dead addresses: only files under a live scoped dir can
+        # still be masked. Match on the /data/<dirname>/ COMPONENT, not
+        # the absolute warehouse path: stored addresses are Spark
+        # _metadata URIs (file:…, percent-encoded), so an absolute-path
+        # substring silently misses on any warehouse path with
+        # URI-escaped characters and would drop LIVE addresses — dir
+        # names are uuid hex and never escape, so the component match
+        # is representation-safe (a false keep is harmless: the address
+        # simply never matches a scanned row).
+        scope = sorted({d for e in dvs for d in e["applies_to"]})
         live_scope = [d for d in scope if d in set(manifest["files"])]
-        if not live_scope:
-            # every scoped dir was since rewritten: all addresses are
-            # dead — publish the equality entries only, no DV at all
-            return self._commit(
-                namespace, table, None, operation="rewrite_to_dv",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), clear_deletes=True,
-                extra_deletes=keep,
+        out, entry = None, None
+        if live_scope:
+            alive = F.col("file_path").contains(f"/data/{scope[0]}/")
+            for d in scope[1:]:
+                alive = alive | F.col("file_path").contains(f"/data/{d}/")
+            out, entry = self._dv_write_relation(
+                spark, namespace, table, manifest, merged.filter(alive),
+                live_scope,
             )
-        alive = F.col("file_path").contains(f"/data/{scope[0]}/")
-        for d in scope[1:]:
-            alive = alive | F.col("file_path").contains(f"/data/{d}/")
-        del_dir_name = f"dvdelete-{uuid.uuid4().hex[:12]}"
-        out = self._tbl(namespace, table, "deletes", del_dir_name)
-        # the shared runs-first writer (r15) handles everything the r14
-        # fold special-cased: layout choice (an accreted backlog of
-        # band deletes folds into a runs-sized ``ranges`` entry),
-        # size-aware write fan-out for the scattered form (from the
-        # EXACT folded volume — the stats pass runs before the write —
-        # not the r14 footer estimate), and the gate stats stamp (the
-        # fold must not launder a dense DV into an unstamped entry)
-        applies_to, stats, layout = self._dv_write_relation(
-            spark, out, merged.filter(alive), live_scope, namespace, table
-        )
-        if layout is None:
-            # every address was dead after all: equality entries only
-            return self._commit(
-                namespace, table, None, operation="rewrite_to_dv",
-                carry=False, base_sid=base, inherit_spec=True,
-                carry_dirs=list(manifest["files"]), clear_deletes=True,
-                extra_deletes=keep,
-            )
-        entry = {
-            "dir": del_dir_name,
-            "mode": "dv",
-            "layout": layout,
-            "applies_to": applies_to,
-            **stats,
-        }
+        # no live address at all (every scoped dir was since rewritten):
+        # publish the equality entries only, no DV
         try:
             return self._commit(
                 namespace, table, None, operation="rewrite_to_dv",
                 carry=False, base_sid=base, inherit_spec=True,
                 carry_dirs=list(manifest["files"]), clear_deletes=True,
-                extra_deletes=keep + [entry],
+                extra_deletes=keep + ([entry] if entry else []),
             )
         except CommitConflict:
-            shutil.rmtree(out, ignore_errors=True)
+            if out is not None:
+                shutil.rmtree(out, ignore_errors=True)
             raise
 
     def _pending_deletes(
@@ -2892,127 +2677,55 @@ class SnapCatalog:
         ]
 
     def _dv_apply_mode(
-        self, manifest: dict, entry: dict, keys_df: DataFrame
+        self, manifest: dict, applies_to: list[str], stats: dict
     ) -> str:
-        """Representation choice for the DV read apply — three plans by
-        measured shape, all decided from entry-stamped stats (no job):
+        """The DV read's apply plan, chosen by the writer from the
+        stats it just measured (no job) and stamped on the entry:
 
-        - ``probe`` (sparse): the file-count-sized relation broadcasts,
-          rows probe their file's sorted ordinal array. Shuffle-free;
-          per-row work O(positions-per-file), payload positions-sized —
-          both fine below the density/size gates.
-        - ``ranges`` (dense but contiguous): positions collapse to few
-          (start, end) runs — time-range deletes, partition drops — so
-          the broadcast payload and the per-row ``exists`` probe are
-          RUN-count-bounded at ANY density. Still shuffle-free.
-        - ``anti`` (dense and scattered): the only shape where nothing
-          small exists to broadcast; explode into a (file, pos)
-          anti-join — one hash exchange, linear work, bounded memory.
+        - ``probe`` (sparse and scattered): the file-count-sized
+          relation broadcasts, rows probe their file's sorted ordinal
+          array. Shuffle-free; per-row work O(positions-per-file),
+          payload positions-sized — both fine below the density gates.
+        - ``ranges`` (contiguous, or dense with few runs): positions
+          collapse to (start, end) runs — time-range deletes, partition
+          drops — so the broadcast payload and the per-row ``exists``
+          probe are RUN-count-bounded at ANY density. Still
+          shuffle-free. Chosen whenever the run counts fit the
+          range-probe bounds and either positions outnumber runs by
+          ``DV_STORE_RANGES_FACTOR`` (contiguity beats density: even at
+          sparse density the ordinal probe pays O(positions-per-file)
+          per row where the range probe pays O(runs-per-file)) or the
+          DV is dense.
+        - ``anti`` (dense, runs over the bounds): nothing small exists
+          to broadcast; explode into a (file, pos) anti-join — one hash
+          exchange, linear work, bounded memory.
 
         Dense means ANY of: doomed fraction of the scoped dirs' rows
         above ``DV_PROBE_MAX_DENSITY``, a single file carrying more than
         ``DV_PROBE_MAX_FILE_POSITIONS`` ordinals, or total positions
-        above ``DV_PROBE_MAX_TOTAL_POSITIONS``.
-
-        Contiguity beats density (r14): whenever positions outnumber
-        runs by ``DV_RANGES_PREFER_FACTOR`` and the run counts fit the
-        probe bounds, ``ranges`` wins outright — even at sparse density
-        the ordinal probe pays O(positions-per-file) per row while the
-        range probe pays O(runs-per-file), so a sparse-but-contiguous
-        band (a range delete over a range-organized file) must not fall
-        into the sparse ordinal plan."""
-        n = entry.get("n_positions")
-        mx = entry.get("max_file_positions")
-        if n is None or mx is None:
-            # legacy unstamped entry: one tiny aggregate, memoized per
-            # delete file (they are immutable) so repeat reads of an
-            # old warehouse don't pay a Spark job per scan forever
-            cached = self._legacy_dv_stats.get(entry["dir"])
-            if cached is None:
-                row = keys_df.select(
-                    F.sum(F.size("positions")).alias("n"),
-                    F.max(F.size("positions")).alias("mx"),
-                ).first()
-                cached = (int(row["n"] or 0), int(row["mx"] or 0))
-                self._legacy_dv_stats[entry["dir"]] = cached
-            n, mx = cached
-        mfr = entry.get("max_file_ranges")
-        nrt = entry.get("n_ranges")
+        above ``DV_PROBE_MAX_TOTAL_POSITIONS``. Every input is immutable
+        once written (data dirs never change after publish), so the
+        write-time choice is the one a read-time gate would make on
+        every read."""
+        n = stats["n_positions"]
+        nrt = stats["n_ranges"]
         ranges_fit = (
-            mfr is not None
-            and mfr <= self.DV_RANGE_PROBE_MAX_PER_FILE
-            and nrt is not None
+            stats["max_file_ranges"] <= self.DV_RANGE_PROBE_MAX_PER_FILE
             and nrt <= self.DV_RANGE_PROBE_MAX_TOTAL_RANGES
         )
-        # CONTIGUITY BEATS DENSITY (r14): when the ordinals collapse to
-        # far fewer runs than positions, the range probe strictly
-        # dominates the ordinal probe — payload AND per-row work drop
-        # from O(positions-per-file) to O(runs-per-file) — so prefer it
-        # even at sparse density. The motivating shape is a range
-        # predicate's MoR delete over a range-organized file: ~6k
-        # contiguous ordinals are ONE run, and probing a 6k-long array
-        # per row is ~6000× the work of one between() check (measured:
-        # snap_delete_auto's range lane, bench r14).
-        if ranges_fit and nrt and n >= self.DV_RANGES_PREFER_FACTOR * nrt:
-            return "ranges"
         dense = (
-            mx > self.DV_PROBE_MAX_FILE_POSITIONS
+            stats["max_file_positions"] > self.DV_PROBE_MAX_FILE_POSITIONS
             or n > self.DV_PROBE_MAX_TOTAL_POSITIONS
         )
         if not dense:
             dir_rows = manifest.get("dir_rows") or {}
-            scoped = [dir_rows.get(d) for d in entry["applies_to"]]
+            scoped = [dir_rows.get(d) for d in applies_to]
             if scoped and all(s is not None for s in scoped):
                 total = sum(scoped)
                 dense = bool(total) and n / total > self.DV_PROBE_MAX_DENSITY
-        if not dense:
-            return "probe"
-        if ranges_fit:
+        if ranges_fit and (dense or n >= self.DV_STORE_RANGES_FACTOR * nrt):
             return "ranges"
-        return "anti"
-
-    @staticmethod
-    def _runs_of(positions) -> tuple[list[int], list[int]]:
-        """Collapse a SORTED, duplicate-free ordinal array into maximal
-        contiguous runs: returns (starts, ends), inclusive on both ends.
-        The pure kernel under the ranges apply — property-pinned in
-        tests/test_snaptable.py (every ordinal covered by exactly one
-        run, no run covers a non-member, runs are maximal)."""
-        import numpy as np
-
-        a = np.asarray(positions, dtype=np.int64)
-        if a.size == 0:
-            return [], []
-        brk = np.where(np.diff(a) != 1)[0]
-        starts = np.concatenate(([a[0]], a[brk + 1]))
-        ends = np.concatenate((a[brk], [a[-1]]))
-        return starts.tolist(), ends.tolist()
-
-    @staticmethod
-    def _dv_ranges_relation(keys_df: DataFrame) -> DataFrame:
-        """Collapse a DV relation's per-file sorted ordinal arrays into
-        (starts, ends) run arrays — executed over the FILE-count-sized
-        delete relation (Arrow-batched numpy diff per file row, never
-        per data row), so deriving ranges costs one tiny pass however
-        many rows they delete."""
-        import pandas as pd
-
-        runs_of = SnapCatalog._runs_of
-
-        def gen(batches):
-            for pdf in batches:
-                rows = []
-                for fp, arr in zip(pdf["file_path"], pdf["positions"]):
-                    starts, ends = runs_of(arr)
-                    rows.append((fp, starts, ends))
-                yield pd.DataFrame(
-                    rows, columns=["file_path", "starts", "ends"]
-                )
-
-        return keys_df.select("file_path", "positions").mapInPandas(
-            gen,
-            schema="file_path string, starts array<long>, ends array<long>",
-        )
+        return "anti" if dense else "probe"
 
     def _read_with_deletes(
         self,
@@ -3054,14 +2767,11 @@ class SnapCatalog:
                 groups.setdefault(key, []).append(d)
             out = None
             for key, dirs in sorted(groups.items(), key=lambda kv: sorted(kv[0])):
-                # positional entries anti-join on the rows' physical
-                # (file, ordinal) address, which must be projected at
-                # SCAN time (hidden _metadata columns don't survive a
-                # union), so the group's read carries them when needed
-                needs_pos = any(
-                    deletes[i].get("mode") in ("positional", "dv")
-                    for i in key
-                )
+                # DVs apply on the rows' physical (file, ordinal)
+                # address, which must be projected at SCAN time (hidden
+                # _metadata columns don't survive a union), so the
+                # group's read carries them when needed
+                needs_pos = any(deletes[i].get("mode") == "dv" for i in key)
                 # schema resolution runs BEFORE the anti-joins: delete
                 # entries authored after a rename reference logical names
                 # (pre-rename entries refuse the rename — compact first)
@@ -3077,118 +2787,72 @@ class SnapCatalog:
                     keys_df = spark.read.parquet(
                         self._tbl(namespace, table, "deletes", e["dir"])
                     )
-                    if e.get("mode") == "positional":
+                    if e.get("mode") != "dv":
+                        part = part.join(keys_df, e["key_cols"], "left_anti")
+                    elif e["apply"] == "anti":
+                        # dense and scattered: exploded (file, pos)
+                        # anti-join (one hash exchange, linear work)
                         doomed = keys_df.select(
                             F.col("file_path").alias(self.POS_FILE_COL),
-                            F.col("pos").alias(self.POS_IDX_COL),
+                            F.explode("positions").alias(self.POS_IDX_COL),
                         )
                         part = part.join(
                             doomed,
                             [self.POS_FILE_COL, self.POS_IDX_COL],
                             "left_anti",
                         )
-                    elif e.get("mode") == "dv":
-                        # deletion vector: one row per touched file.
-                        # SHAPE-GATED apply (_dv_apply_mode): sparse →
-                        # broadcast ordinal probe (shuffle-free);
-                        # dense-but-contiguous → broadcast RANGE probe
-                        # (run-count-bounded bytes and work at any
-                        # density, still shuffle-free);
-                        # dense-and-scattered → exploded (file, pos)
-                        # anti-join (one hash exchange, linear work).
-                        # A ``layout: "ranges"`` entry (r15 storage)
-                        # holds (starts, ends) run arrays, guaranteed
-                        # inside the probe bounds by its writer — the
-                        # ranges apply is forced (the other plans would
-                        # read a ``positions`` column that does not
-                        # exist, and at the stored >= 8x compression
-                        # the range probe dominates them anyway).
-                        layout = e.get("layout", "positions")
-                        mode = (
-                            "ranges"
-                            if layout == "ranges"
-                            else self._dv_apply_mode(manifest, e, keys_df)
+                    elif e["apply"] == "ranges":
+                        # stored (starts, ends) runs broadcast AS IS:
+                        # run-count-bounded bytes and per-row work at
+                        # any density, shuffle-free
+                        rng = keys_df.select(
+                            F.col("file_path").alias(self.POS_FILE_COL),
+                            F.col("starts").alias("_dv_starts"),
+                            F.col("ends").alias("_dv_ends"),
                         )
-                        if mode == "anti":
-                            doomed = keys_df.select(
-                                F.col("file_path").alias(self.POS_FILE_COL),
-                                F.explode("positions").alias(
-                                    self.POS_IDX_COL
-                                ),
+                        pos_col = F.col(self.POS_IDX_COL)
+                        # zip_with, not arrays_zip: arrays_zip names
+                        # its struct fields after the input columns,
+                        # which is version-sensitive Spark behavior —
+                        # a rename to '0'/'1' would silently break
+                        # the lambda's field access. zip_with carries
+                        # no field names to depend on.
+                        in_a_run = F.exists(
+                            F.zip_with(
+                                F.col("_dv_starts"),
+                                F.col("_dv_ends"),
+                                lambda s, e: (pos_col >= s) & (pos_col <= e),
+                            ),
+                            lambda hit: hit,
+                        )
+                        part = (
+                            part.join(
+                                F.broadcast(rng), [self.POS_FILE_COL], "left"
                             )
-                            part = part.join(
-                                doomed,
-                                [self.POS_FILE_COL, self.POS_IDX_COL],
-                                "left_anti",
+                            .filter(
+                                F.col("_dv_starts").isNull() | ~in_a_run
                             )
-                        elif mode == "ranges":
-                            # stored-ranges entries broadcast the file
-                            # AS IS — zero derivation; positions-layout
-                            # entries that the contiguity gate routed
-                            # here derive runs once over the
-                            # file-count-sized relation
-                            rng_src = (
-                                keys_df
-                                if layout == "ranges"
-                                else self._dv_ranges_relation(keys_df)
-                            )
-                            rng = rng_src.select(
-                                F.col("file_path").alias(
-                                    self.POS_FILE_COL
-                                ),
-                                F.col("starts").alias("_dv_starts"),
-                                F.col("ends").alias("_dv_ends"),
-                            )
-                            pos_col = F.col(self.POS_IDX_COL)
-                            # zip_with, not arrays_zip: arrays_zip names
-                            # its struct fields after the input columns,
-                            # which is version-sensitive Spark behavior —
-                            # a rename to '0'/'1' would silently break
-                            # the lambda's field access. zip_with carries
-                            # no field names to depend on.
-                            in_a_run = F.exists(
-                                F.zip_with(
-                                    F.col("_dv_starts"),
-                                    F.col("_dv_ends"),
-                                    lambda s, e: (pos_col >= s)
-                                    & (pos_col <= e),
-                                ),
-                                lambda hit: hit,
-                            )
-                            part = (
-                                part.join(
-                                    F.broadcast(rng),
-                                    [self.POS_FILE_COL],
-                                    "left",
-                                )
-                                .filter(
-                                    F.col("_dv_starts").isNull()
-                                    | ~in_a_run
-                                )
-                                .drop("_dv_starts", "_dv_ends")
-                            )
-                        else:
-                            dv = keys_df.select(
-                                F.col("file_path").alias(self.POS_FILE_COL),
-                                F.col("positions").alias("_dv_positions"),
-                            )
-                            part = (
-                                part.join(
-                                    F.broadcast(dv),
-                                    [self.POS_FILE_COL],
-                                    "left",
-                                )
-                                .filter(
-                                    F.col("_dv_positions").isNull()
-                                    | ~F.array_contains(
-                                        F.col("_dv_positions"),
-                                        F.col(self.POS_IDX_COL),
-                                    )
-                                )
-                                .drop("_dv_positions")
-                            )
+                            .drop("_dv_starts", "_dv_ends")
+                        )
                     else:
-                        part = part.join(keys_df, e["key_cols"], "left_anti")
+                        # sparse: broadcast ordinal probe, shuffle-free
+                        dv = keys_df.select(
+                            F.col("file_path").alias(self.POS_FILE_COL),
+                            F.col("positions").alias("_dv_positions"),
+                        )
+                        part = (
+                            part.join(
+                                F.broadcast(dv), [self.POS_FILE_COL], "left"
+                            )
+                            .filter(
+                                F.col("_dv_positions").isNull()
+                                | ~F.array_contains(
+                                    F.col("_dv_positions"),
+                                    F.col(self.POS_IDX_COL),
+                                )
+                            )
+                            .drop("_dv_positions")
+                        )
                 if needs_pos:
                     part = part.drop(self.POS_FILE_COL, self.POS_IDX_COL)
                 out = part if out is None else out.unionByName(
@@ -3918,9 +3582,7 @@ class SnapCatalog:
                     "directory names embed it — rewrite the layout first"
                 )
             for e in cur.get("deletes") or []:
-                if e.get("mode") != "positional" and old in e.get(
-                    "key_cols", []
-                ):
+                if old in e.get("key_cols", []):
                     raise ValueError(
                         f"column {old!r} is referenced by a pending "
                         "equality-delete entry; compact() first"
@@ -4452,7 +4114,7 @@ class SnapCatalog:
         manifest entries. This is the view that answers file-level
         layout questions ``files`` cannot: small-file skew inside a
         commit, row-group granularity before a compaction decision,
-        and which exact file a positional delete addresses.
+        and which exact file a deletion vector addresses.
 
         Columns: ``ordinal`` (manifest position of the dir), ``data_dir``,
         ``file_ordinal`` (position in sorted file-name order within the
@@ -4592,7 +4254,7 @@ class SnapCatalog:
         - ``n_data_dirs`` high + ``n_small_dirs`` high → ``compact()``
           (or ``compact_manifests`` when only the entry count hurts),
         - ``n_pending_delete_entries`` > 0 → merge-on-read debt;
-          ``compact_position_deletes`` / ``compact()`` fold it,
+          ``rewrite_deletes_to_dv`` / ``compact()`` fold it,
         - ``n_snapshots`` ≫ ``n_current_ancestors`` → rolled-back or
           superseded history; ``expire_snapshots`` reclaims it (minus
           the ``n_refs``-pinned heads),

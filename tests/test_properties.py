@@ -754,6 +754,48 @@ def test_screened_drop_ids_matches_two_pipeline_form(spark):
     assert fused == (intra | cross)
 
 
+def test_dedup_verify_hostile_id_and_decimal_threshold(spark):
+    """The parsed-SQL verify paths (incremental_minhash_pairs and
+    screened_drop_ids) take any id column name and any real-number
+    threshold: an id named ``doc-id`` (not a bare SQL identifier) and a
+    ``Decimal`` threshold (whose repr is not SQL) yield exactly the
+    plain-name, float-threshold results."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from component_iceberg_spark.operators import dedup as D
+
+    base = "the quick brown fox jumps over the lazy dog near the river bank "
+    rows = [
+        (i, base * 3 + f"tail {i % 10} unique words {'x' * (i % 4)}")
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def run(id_col, threshold):
+        d = df.withColumnRenamed("doc_id", id_col)
+        prior = d.filter(F.col(id_col) < 20)
+        batch = d.filter(F.col(id_col) >= 20)
+        pairs = D.incremental_minhash_pairs(
+            prior, batch, id_col, "text", threshold
+        )
+        drops = D.screened_drop_ids(
+            batch, D.corpus_minhash_profile(batch, id_col, "text"),
+            id_col, "text", threshold, prior=prior,
+            prior_profile=D.corpus_minhash_profile(prior, id_col, "text"),
+        )
+        assert drops.columns == [id_col]
+        return (
+            sorted(map(tuple, pairs.collect())),
+            sorted(r[0] for r in drops.collect()),
+        )
+
+    want = run("doc_id", 0.8)
+    assert want[0] and want[1], "fixture must produce pairs and drops"
+    assert run("doc-id", Decimal("0.8")) == want
+
+
 def _model_merge(
     base: dict[int, int],
     source: dict[int, int],
@@ -1951,38 +1993,74 @@ def test_intersect_join_presence_semantics(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# DV run (range) encoding — the pure kernel under the r13 ranges apply
+# DV writer — both stored layouts mask exactly the addressed ordinals
 # ---------------------------------------------------------------------------
 
+_DV_ROWS = 2_000
 
-@settings(max_examples=300, deadline=None)
-@given(
-    st.sets(st.integers(min_value=0, max_value=10_000), max_size=400)
+
+@pytest.fixture(scope="module")
+def dv_table(spark, tmp_path_factory):
+    """One single-file table whose row ordinal equals its ``id``, plus
+    its snapshot id and data-file address; each example authors a DV
+    on it and rolls back (metadata-only) afterwards."""
+    from pyspark.sql import functions as F
+
+    cat = SnapCatalog(str(tmp_path_factory.mktemp("dv_wh")))
+    cat.create_or_replace(
+        "ns", "t", spark.range(_DV_ROWS).coalesce(1)
+    )
+    addressed = cat.read_with_positions(spark, "ns", "t")
+    assert addressed.filter(F.col("id") != F.col(cat.POS_IDX_COL)).count() == 0
+    path = addressed.select(cat.POS_FILE_COL).first()[0]
+    return cat, cat._current_sid("ns", "t"), path
+
+
+_ordinal = st.integers(min_value=0, max_value=_DV_ROWS - 1)
+# scattered ordinals unioned with a few contiguous bands
+_dv_positions = st.builds(
+    lambda pts, bands: pts.union(
+        *(range(lo, min(lo + n, _DV_ROWS)) for lo, n in bands)
+    ),
+    st.sets(_ordinal, max_size=200),
+    st.lists(st.tuples(_ordinal, st.integers(1, 300)), max_size=3),
 )
-def test_dv_runs_encoding_is_exact_cover(positions):
-    """_runs_of (the kernel the broadcast range probe applies): the runs
-    must cover exactly the input set — every ordinal inside exactly one
-    [start, end], no run covering a non-member, runs sorted, disjoint,
-    maximal (adjacent runs never touch), and total run length equals the
-    input size. Whatever hypothesis draws — empty, singletons, long
-    bands, scattered — a violation here is a wrong DELETE at read time."""
-    from component_iceberg_spark.io.snaptable import SnapCatalog
 
-    sorted_pos = sorted(positions)
-    starts, ends = SnapCatalog._runs_of(sorted_pos)
-    assert len(starts) == len(ends)
-    covered = set()
-    prev_end = None
-    for s, e in zip(starts, ends):
-        assert s <= e
-        if prev_end is not None:
-            # maximality: a gap of exactly 1 would mean two runs that
-            # should have been merged
-            assert s > prev_end + 1
-        covered.update(range(s, e + 1))
-        prev_end = e
-    assert covered == set(positions)
-    assert sum(e - s + 1 for s, e in zip(starts, ends)) == len(positions)
+
+@settings(max_examples=6, deadline=None)
+@given(positions=_dv_positions)
+def test_dv_runs_encoding_is_exact_cover(spark, dv_table, positions):
+    """delete_positions_dv on any ordinal set — empty, singletons, long
+    bands, scattered — makes the read drop exactly that set, under BOTH
+    stored layouts: the runs encoding (``ranges``, forced by a factor
+    of 1 and unbounded run caps) and the explicit ordinal arrays
+    (``positions``, forced by a zero run cap). A run that misses or
+    over-covers an ordinal is a wrong DELETE at read time."""
+    cat, base, path = dv_table
+    pos_df = spark.createDataFrame(
+        [(path, p) for p in sorted(positions)],
+        f"{cat.POS_FILE_COL} string, {cat.POS_IDX_COL} long",
+    )
+    want = set(range(_DV_ROWS)) - positions
+    for layout, knobs in (
+        ("ranges", {"DV_STORE_RANGES_FACTOR": 1,
+                    "DV_RANGE_PROBE_MAX_PER_FILE": 10**9}),
+        ("positions", {"DV_RANGE_PROBE_MAX_PER_FILE": 0}),
+    ):
+        for k, v in knobs.items():
+            setattr(cat, k, v)
+        try:
+            sid = cat.delete_positions_dv(spark, "ns", "t", pos_df)
+            if positions:
+                (entry,) = cat._manifest("ns", "t", sid)["deletes"]
+                assert entry["layout"] == layout, entry
+                assert entry["n_positions"] == len(positions)
+            got = {r.id for r in cat.read(spark, "ns", "t").collect()}
+            assert got == want, layout
+        finally:
+            for k in knobs:
+                delattr(cat, k)
+            cat.rollback_to("ns", "t", base)
 
 
 @settings(max_examples=500, deadline=None)

@@ -231,13 +231,15 @@ def test_frequent_best_shuffle_is_state_sized(
 
 def test_dv_read_shuffle_free_vs_positional(spark, sf_dir):
     """The DV format's 100 TB claim, in bytes, at the density the probe
-    is FOR (sparse — below the r13 density gate): the positional-file
-    format anti-joins a row-count-sized build side — under the no-auto-
+    is FOR (sparse — below the density gate): a v2-style positional
+    delete file (one (file_path, pos) ROW per doomed row) applies as an
+    anti-join with a row-count-sized build side — under the no-auto-
     broadcast regime (what a 100 TB build side forces) that plan
     hash-exchanges the whole scan — while the DV relation broadcasts and
-    the read shuffles ~NOTHING. Same table, same doomed rows, two
-    formats. (The DENSE regime, where the gate flips the DV apply to
-    the anti-join, is pinned by test_dv_read_density_gate_flips_apply.)"""
+    the read shuffles ~NOTHING. Same table, same doomed rows; the
+    positional baseline is built here from the same addressed scan.
+    (The DENSE regime, where the writer picks the anti-join plan for
+    the DV too, is pinned by test_dv_read_density_gate_flips_apply.)"""
     from pyspark.sql import functions as F
 
     from component_iceberg_spark.io.snaptable import SnapCatalog
@@ -247,33 +249,29 @@ def test_dv_read_shuffle_free_vs_positional(spark, sf_dir):
     o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    reads = {}
-    for fmt in ("positional", "dv"):
-        cat = SnapCatalog(os.path.join(wh_root, fmt))
-        cat.create_or_replace("ns", "t", o)
-        addressed = cat.read_with_positions(spark, "ns", "t")
-        # ~1% of rows: below DV_PROBE_MAX_DENSITY, so the DV read stays
-        # on the broadcast-probe branch
-        doomed = addressed.filter(F.col("o_orderkey") % 97 == 0).select(
-            cat.POS_FILE_COL, cat.POS_IDX_COL
-        )
-        if fmt == "dv":
-            cat.delete_positions_dv(spark, "ns", "t", doomed)
-        else:
-            cat.delete_positions(spark, "ns", "t", doomed)
-        reads[fmt] = cat, "ns", "t"
+    cat = SnapCatalog(os.path.join(wh_root, "wh"))
+    cat.create_or_replace("ns", "t", o)
+    addr = [cat.POS_FILE_COL, cat.POS_IDX_COL]
+    addressed = cat.read_with_positions(spark, "ns", "t")
+    # ~1% of rows: below DV_PROBE_MAX_DENSITY, so the DV read stays on
+    # the broadcast-probe plan
+    doomed = addressed.filter(F.col("o_orderkey") % 97 == 0).select(*addr)
+    pos_file = os.path.join(wh_root, "posdelete")
+    doomed.write.parquet(pos_file)
+    positional = addressed.join(
+        spark.read.parquet(pos_file), addr, "left_anti"
+    ).drop(*addr)
+    cat.delete_positions_dv(spark, "ns", "t", doomed)
     want = o.filter("o_orderkey % 97 <> 0").count()
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        vols = {}
-        for fmt, (cat, ns, t) in reads.items():
-            df = cat.read(spark, ns, t)
-            assert df.count() == want, fmt
-            vols[fmt] = dataframe_volume(cat.read(spark, ns, t))
+        assert cat.read(spark, "ns", "t").count() == want
+        assert positional.count() == want
+        dv = dataframe_volume(cat.read(spark, "ns", "t"))
+        pos = dataframe_volume(positional)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    dv, pos = vols["dv"], vols["positional"]
     # DV: explicit broadcast of the file-count-sized relation — the
     # read plans no shuffle at all
     assert dv.shuffle_write_bytes < 64 * 1024, dv.as_dict()
@@ -287,7 +285,7 @@ def test_dv_read_shuffle_free_vs_positional(spark, sf_dir):
 
 
 def test_dv_read_density_gate_flips_apply(spark, sf_dir):
-    """The r13 shape gate, pinned on all THREE apply plans over the SAME
+    """The writer's apply plan, pinned on all THREE plans over the SAME
     table (VERDICT r12 #2): a sparse DV (~1% doomed) applies as the
     broadcast ordinal probe (BroadcastExchange + array_contains, no
     exchange of the scan); a dense SCATTERED DV (a third doomed, every
@@ -334,12 +332,11 @@ def test_dv_read_density_gate_flips_apply(spark, sf_dir):
             df = cat.read(spark, "ns", "t")
             assert df.count() == n - o.filter(pred).count(), label
             plans[label] = df._jdf.queryExecution().executedPlan().toString()
-        # r14 contiguity preference, its own deterministic fixture (the
-        # orders fixture's rows-per-file sits below the 64x prefer
-        # factor at test SF): 20k rows in 4 range-disjoint files, a 4%
-        # prefix band = 800 positions in ONE run — sparse by every
-        # density gate, yet the ordinal probe would pay 800 comparisons
-        # per row where the range probe pays one between()
+        # contiguity preference, its own deterministic fixture: 20k
+        # rows in 4 range-disjoint files, a 4% prefix band = 800
+        # positions in ONE run — sparse by every density gate, yet the
+        # ordinal probe would pay 800 comparisons per row where the
+        # range probe pays one between()
         cat = SnapCatalog(os.path.join(wh_root, "sparse_contiguous"))
         ids = spark.range(20_000).select(
             F.col("id"), (F.col("id") * 2).alias("v")

@@ -519,11 +519,11 @@ def test_merge_on_read_delete_cycle(spark, sf_dir, tmp_path):
 
 
 def test_positional_delete_cycle(spark, sf_dir, tmp_path):
-    """Positional-delete files ((file_path, pos), the second Iceberg v2
-    delete format): no data rewrite at delete time; reads mask exactly
-    the addressed rows; later appends are physically out of scope;
-    compaction materializes and clears them — the same contract as the
-    equality-delete cycle."""
+    """Positional deletes (rows addressed by (file_path, pos), stored as a
+    deletion vector) at sparse density: no data rewrite at delete time;
+    reads mask exactly the addressed rows; later appends are physically
+    out of scope; compaction materializes and clears them — the same
+    contract as the equality-delete cycle."""
     import pytest
 
     wh = str(tmp_path / "wh")
@@ -540,12 +540,12 @@ def test_positional_delete_cycle(spark, sf_dir, tmp_path):
     doomed = addressed.filter("o_orderkey < 100").select(
         cat.POS_FILE_COL, cat.POS_IDX_COL
     )
-    sid = cat.delete_positions(spark, "ns", "t", doomed)
+    sid = cat.delete_positions_dv(spark, "ns", "t", doomed)
 
     # metadata-only: no new data dir
     assert set(os.listdir(data_root)) == dirs_before
     (entry,) = cat._manifest("ns", "t", sid)["deletes"]
-    assert entry["mode"] == "positional"
+    assert entry["mode"] == "dv"
     want = o.filter("o_orderkey >= 100").count()
     assert cat.read(spark, "ns", "t").count() == want
     # position columns never leak into the user schema
@@ -564,7 +564,7 @@ def test_positional_delete_cycle(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError, match="pending"):
         cat.read_with_positions(spark, "ns", "t")
 
-    # compaction folds the positional deletes in and clears the entries
+    # compaction folds the DV in and clears the entries
     sid = cat.compact(spark, "ns", "t")
     m = cat._manifest("ns", "t", sid)
     assert m["deletes"] == []
@@ -611,137 +611,13 @@ def test_partitions_meta_hidden_spec(spark, sf_dir, tmp_path):
     assert cat.POS_FILE_COL in rp.columns
 
 
-def test_compact_position_deletes(spark, sf_dir, tmp_path):
-    """rewrite_position_delete_files analogue: N pending positional
-    delete files merge into ONE (reads identical, one anti-join pass
-    instead of N), scope-widening is safe (positions are physically
-    file-scoped), dead addresses from CoW-rewritten dirs are dropped,
-    and equality entries ride along unchanged."""
-    wh = str(tmp_path / "wh")
-    cat = SnapCatalog(wh)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    cat.create_or_replace("ns", "t", o.filter("o_orderkey < 800"))
-    cat.append("ns", "t", o.filter("o_orderkey >= 800"))
-
-    # three small positional deletes, authored one clean snapshot at a
-    # time via compact-free reads (read_with_positions refuses pending
-    # deletes, so address everything up front)
-    addressed = cat.read_with_positions(spark, "ns", "t")
-    addr = addressed.select(
-        "o_orderkey", cat.POS_FILE_COL, cat.POS_IDX_COL
-    ).collect()
-    import pandas as pd
-
-    def pos_df(lo, hi):
-        rows = [
-            (r[cat.POS_FILE_COL], r[cat.POS_IDX_COL])
-            for r in addr
-            if lo <= r["o_orderkey"] < hi
-        ]
-        return spark.createDataFrame(
-            pd.DataFrame(
-                rows, columns=[cat.POS_FILE_COL, cat.POS_IDX_COL]
-            )
-        )
-
-    cat.delete_positions(spark, "ns", "t", pos_df(0, 50))
-    cat.delete_positions(spark, "ns", "t", pos_df(50, 100))
-    cat.delete_positions(spark, "ns", "t", pos_df(1000, 1100))
-    # one equality entry rides along
-    cat.delete_keys(
-        spark, "ns", "t",
-        o.filter("o_orderkey = 777").select("o_orderkey"), ["o_orderkey"],
-    )
-    before = sorted(
-        tuple(r) for r in cat.read(spark, "ns", "t").collect()
-    )
-    m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
-    assert len([e for e in m["deletes"] if e.get("mode") == "positional"]) == 3
-
-    sid = cat.compact_position_deletes(spark, "ns", "t")
-    m = cat._manifest("ns", "t", sid)
-    pos_entries = [e for e in m["deletes"] if e.get("mode") == "positional"]
-    eq_entries = [e for e in m["deletes"] if e.get("mode") != "positional"]
-    assert len(pos_entries) == 1, "merged into one delete file"
-    assert len(eq_entries) == 1, "equality entry carried unchanged"
-    after = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
-    assert after == before, "reads identical through the merge"
-    # idempotent second call is a no-op
-    assert cat.compact_position_deletes(spark, "ns", "t") == sid
-
-    # the merged file carries exactly the live addresses (deduped union
-    # of the three source files; nothing dropped here — all scoped dirs
-    # are still live — and nothing double-counted)
-    merged_file_rows = spark.read.parquet(
-        os.path.join(wh, "ns", "t", "deletes", pos_entries[0]["dir"])
-    ).count()
-    assert merged_file_rows == len(
-        [r for r in addr if r["o_orderkey"] < 100 or 1000 <= r["o_orderkey"] < 1100]
-    )
-
-
-def test_compact_position_deletes_drops_dead_addresses(
-    spark, sf_dir, tmp_path
-):
-    """Addresses into a CoW-rewritten (no-longer-referenced) dir are
-    DEAD — the rewrite already materialized those deletes — and must
-    not survive into the merged delete file."""
-    wh = str(tmp_path / "wh")
-    cat = SnapCatalog(wh)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    cat.create_or_replace("ns", "t", o.filter("o_orderkey < 1000"))
-    cat.append("ns", "t", o.filter("o_orderkey >= 1000"))
-    addressed = cat.read_with_positions(spark, "ns", "t")
-    import pandas as pd
-
-    addr = addressed.select(
-        "o_orderkey", cat.POS_FILE_COL, cat.POS_IDX_COL
-    ).collect()
-
-    def pos_df(keys):
-        rows = [
-            (r[cat.POS_FILE_COL], r[cat.POS_IDX_COL])
-            for r in addr
-            if r["o_orderkey"] in keys
-        ]
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=[cat.POS_FILE_COL, cat.POS_IDX_COL])
-        )
-
-    # entry 1 spans both dirs; entry 2 addresses only the first
-    cat.delete_positions(spark, "ns", "t", pos_df(set(range(0, 50)) | set(range(1000, 1050))))
-    cat.delete_positions(spark, "ns", "t", pos_df(set(range(50, 80))))
-    # CoW-rewrite the second dir: its pending deletes materialize and the
-    # dir leaves the manifest — its addresses are now dead
-    cat.delete_where(spark, "ns", "t", "o_orderkey >= 1200")
-    before = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
-
-    sid = cat.compact_position_deletes(spark, "ns", "t")
-    m = cat._manifest("ns", "t", sid)
-    (entry,) = [e for e in m["deletes"] if e.get("mode") == "positional"]
-    merged = spark.read.parquet(
-        os.path.join(wh, "ns", "t", "deletes", entry["dir"])
-    )
-    live_keys = {
-        r["o_orderkey"] for r in addr if r["o_orderkey"] < 80
-    }
-    assert merged.count() == len(live_keys), "dead second-dir addresses dropped"
-    after = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
-    assert after == before
-
-
 def test_compact_manifests_never_folds_positional_dirs(spark, sf_dir, tmp_path):
     """Manifest folding hard-links data files under NEW basenames, which
     would orphan stored (file_path, pos) addresses — dirs covered by a
-    positional entry must be carried as-is, other dirs still fold, and
-    the masked rows stay masked after the fold. Positional entries scope
-    to the dirs their addresses TOUCH (not every dir visible at delete
-    time), so the second commit — addressed by nothing — folds with the
-    clean dirs."""
+    DV must be carried as-is, other dirs still fold, and the masked rows
+    stay masked after the fold. DVs scope to the dirs their addresses
+    TOUCH (not every dir visible at delete time), so the second commit —
+    addressed by nothing — folds with the clean dirs."""
     wh = str(tmp_path / "wh")
     cat = SnapCatalog(wh)
     n = load_table(spark, sf_dir, "nation")
@@ -753,7 +629,7 @@ def test_compact_manifests_never_folds_positional_dirs(spark, sf_dir, tmp_path):
         cat.POS_FILE_COL, cat.POS_IDX_COL
     )
     assert doomed.count() == 1
-    cat.delete_positions(spark, "ns", "t", doomed)
+    cat.delete_positions_dv(spark, "ns", "t", doomed)
     # two more commits with no pending-delete coverage: these CAN fold
     cat.append("ns", "t", n.filter("n_regionkey = 3"))
     cat.append("ns", "t", n.filter("n_regionkey = 4"))
@@ -766,7 +642,7 @@ def test_compact_manifests_never_folds_positional_dirs(spark, sf_dir, tmp_path):
     # folds with the two clean dirs -> 2 dirs total
     assert len(post["files"]) == 2
     (entry,) = post["deletes"]
-    assert entry["mode"] == "positional"
+    assert entry["mode"] == "dv"
     assert len(entry["applies_to"]) == 1
     got = {r.n_nationkey for r in cat.read(spark, "ns", "t").collect()}
     assert got == want
@@ -775,19 +651,18 @@ def test_compact_manifests_never_folds_positional_dirs(spark, sf_dir, tmp_path):
 def test_compact_manifests_equality_entry_keeps_positional_dirs(
     spark, sf_dir, tmp_path
 ):
-    """Regression (r11 self-review): an EQUALITY entry that also covers
-    a positional-covered dir must keep that dir through the manifest
-    fold — the positional dir's singleton group key retains the entry
-    indices, so the remap still attributes the dir to the equality
-    entry (an earlier draft dropped it, silently unmasking the
-    equality-deleted keys in that dir)."""
+    """Regression: an EQUALITY entry that also covers a DV-covered dir
+    must keep that dir through the manifest fold — the DV dir's
+    singleton group key retains the entry indices, so the remap still
+    attributes the dir to the equality entry (an earlier draft dropped
+    it, silently unmasking the equality-deleted keys in that dir)."""
     wh = str(tmp_path / "wh")
     cat = SnapCatalog(wh)
     n = load_table(spark, sf_dir, "nation")
     cat.create_or_replace("ns", "t", n.filter("n_regionkey < 2"))
     # positional delete covering the sole dir (key 6 lives in it)
     addressed = cat.read_with_positions(spark, "ns", "t")
-    cat.delete_positions(
+    cat.delete_positions_dv(
         spark, "ns", "t",
         addressed.filter("n_nationkey = 6").select(
             cat.POS_FILE_COL, cat.POS_IDX_COL
@@ -806,7 +681,7 @@ def test_compact_manifests_equality_entry_keeps_positional_dirs(
 
     sid = cat.compact_manifests("ns", "t")
     post = cat._manifest("ns", "t", sid)
-    eq = [e for e in post["deletes"] if e.get("mode") != "positional"]
+    eq = [e for e in post["deletes"] if e.get("mode") != "dv"]
     assert len(eq) == 1 and len(eq[0]["applies_to"]) == 1, post["deletes"]
     got = {r.n_nationkey for r in cat.read(spark, "ns", "t").collect()}
     assert got == want, "equality delete must survive the fold"
@@ -2696,17 +2571,18 @@ def test_update_where_auto_density_dispatch(spark, sf_dir, tmp_path):
 
 
 def test_dv_apply_mode_threshold_matrix(tmp_path):
-    """_dv_apply_mode decided purely from stamped entry stats (keys_df
-    untouched — None proves no job runs): probe below every gate;
-    density/per-file/total-positions each flip dense; dense+contiguous →
-    ranges; per-file runs over cap OR total runs over cap (the broadcast
-    payload bound no small fixture can reach) → anti."""
+    """_dv_apply_mode, the writer's plan choice, decided purely from the
+    measured stats and the manifest's scoped row counts: probe below
+    every gate; density/per-file/total-positions each flip dense;
+    dense+few runs → ranges; per-file runs over cap OR total runs over
+    cap (the broadcast payload bound no small fixture can reach) →
+    anti; contiguity (positions >= DV_STORE_RANGES_FACTOR x runs) →
+    ranges even at sparse density, but never past the run caps."""
     cat = SnapCatalog(str(tmp_path / "wh"))
     manifest = {"files": ["d"], "dir_rows": {"d": 100_000}}
 
     def mode(**stats):
-        return cat._dv_apply_mode(manifest, {"applies_to": ["d"], **stats},
-                                  None)
+        return cat._dv_apply_mode(manifest, ["d"], stats)
 
     base = dict(n_positions=100, max_file_positions=100,
                 n_ranges=50, max_file_ranges=50)
@@ -2718,26 +2594,29 @@ def test_dv_apply_mode_threshold_matrix(tmp_path):
                    "n_positions": 9_000}) == "ranges"
     # dense + per-file runs over cap → anti
     assert mode(n_positions=40_000, max_file_positions=4_000,
-                n_ranges=500, max_file_ranges=500) == "anti"
+                n_ranges=5_000, max_file_ranges=500) == "anti"
     # dense + TOTAL runs over cap → anti (payload bound across files)
     assert mode(n_positions=3_000_000, max_file_positions=100,
                 n_ranges=1_500_000, max_file_ranges=100) == "anti"
-    # dense + missing run stamps (legacy fold) → anti, never a blind probe
-    assert mode(n_positions=40_000, max_file_positions=4_000) == "anti"
-    # r14 contiguity preference: SPARSE by every density gate, but
-    # positions outnumber runs 64x+ → ranges wins outright (the ordinal
-    # probe would pay O(positions-per-file) per row for no reason)
+    # contiguity preference: SPARSE by every density gate, but
+    # positions outnumber runs 8x+ → ranges (the ordinal probe would
+    # pay O(positions-per-file) per row for no reason)
     assert mode(n_positions=800, max_file_positions=800,
                 n_ranges=1, max_file_ranges=1) == "ranges"
-    # just under the prefer factor → stays the sparse ordinal probe
-    assert mode(n_positions=63, max_file_positions=63,
+    assert mode(n_positions=8, max_file_positions=8,
+                n_ranges=1, max_file_ranges=1) == "ranges"
+    # just under the store factor → stays the sparse ordinal probe
+    assert mode(n_positions=7, max_file_positions=7,
                 n_ranges=1, max_file_ranges=1) == "probe"
     # contiguity cannot override the run-probe payload bounds: sparse,
     # compressible, but per-file runs over cap → probe (not ranges)
-    assert mode(n_positions=100_000 * 64, max_file_positions=4_000,
-                n_ranges=200, max_file_ranges=200) != "ranges"
-    # legacy entry without run stamps: preference silently unavailable
-    assert mode(n_positions=800, max_file_positions=800) == "probe"
+    assert mode(n_positions=4_000, max_file_positions=4_000,
+                n_ranges=200, max_file_ranges=200) == "probe"
+    # unknown scoped row counts: density is not provable, the caps
+    # still decide
+    scattered = {**base, "n_positions": 40_000, "n_ranges": 40_000}
+    assert mode(**scattered) == "ranges"
+    assert cat._dv_apply_mode({"files": ["d"]}, ["d"], scattered) == "probe"
 
 
 def test_all_data_files_and_metadata_log(spark, sf_dir, tmp_path):
@@ -2845,13 +2724,13 @@ def test_add_files_without_stats_degrades_not_breaks(
 
 
 def test_dv_delete_cycle(spark, sf_dir, tmp_path):
-    """Deletion-vector delete files (the Iceberg v3 / Delta-DV third
-    delete format): one (file_path, sorted positions array) row per
-    touched data file — file-count-sized at ANY delete density. Same
-    lifecycle contract as the positional cycle: no data rewrite at
-    delete time, reads mask exactly the addressed rows, later appends
-    are physically out of scope, re-addressing over pending deletes is
-    refused, and compaction materializes + clears."""
+    """Deletion-vector delete files (the Iceberg v3 / Delta-DV format)
+    at DENSE, scattered density: one (file_path, sorted positions array)
+    row per touched data file — file-count-sized at ANY delete density.
+    Same lifecycle contract as the sparse positional cycle: no data
+    rewrite at delete time, reads mask exactly the addressed rows, later
+    appends are physically out of scope, re-addressing over pending
+    deletes is refused, and compaction materializes + clears."""
     import pytest
 
     wh = str(tmp_path / "wh")
@@ -2865,7 +2744,7 @@ def test_dv_delete_cycle(spark, sf_dir, tmp_path):
 
     addressed = cat.read_with_positions(spark, "ns", "t")
     # DENSE doom set (a third of the table): the density regime where
-    # the positional-file format stops being economic
+    # one delete row per doomed row stops being economic
     doomed = addressed.filter("o_orderkey % 3 = 0").select(
         cat.POS_FILE_COL, cat.POS_IDX_COL
     )
@@ -2909,10 +2788,11 @@ def test_dv_delete_cycle(spark, sf_dir, tmp_path):
 
 
 def test_rewrite_deletes_to_dv_mixed_formats(spark, sf_dir, tmp_path):
-    """rewrite_deletes_to_dv folds positional files AND existing DVs
-    into ONE deletion vector: reads identical through the fold, the
-    equality entry rides along unchanged, a second call is a no-op, and
-    the merged DV carries exactly the live addresses."""
+    """rewrite_deletes_to_dv folds DVs of BOTH storage layouts (ranges
+    bands and scattered ordinal arrays) into ONE deletion vector: reads
+    identical through the fold, the equality entry rides along
+    unchanged, a second call is a no-op, and the merged DV carries
+    exactly the live addresses."""
     wh = str(tmp_path / "wh")
     cat = SnapCatalog(wh)
     o = load_table(spark, sf_dir, "orders").select(
@@ -2935,11 +2815,13 @@ def test_rewrite_deletes_to_dv_mixed_formats(spark, sf_dir, tmp_path):
             pd.DataFrame(rows, columns=[cat.POS_FILE_COL, cat.POS_IDX_COL])
         )
 
-    cat.delete_positions(spark, "ns", "t", pos_df(lambda k: k < 50))
+    # this fixture's orders are key-sorted: the key bands are
+    # contiguous (ranges layout), the sparse mod-37 set is scattered
+    cat.delete_positions_dv(spark, "ns", "t", pos_df(lambda k: k < 100))
     cat.delete_positions_dv(
-        spark, "ns", "t", pos_df(lambda k: 50 <= k < 100)
+        spark, "ns", "t", pos_df(lambda k: 100 <= k < 800 and k % 37 == 0)
     )
-    cat.delete_positions(
+    cat.delete_positions_dv(
         spark, "ns", "t", pos_df(lambda k: 1000 <= k < 1100)
     )
     cat.delete_keys(
@@ -2948,31 +2830,27 @@ def test_rewrite_deletes_to_dv_mixed_formats(spark, sf_dir, tmp_path):
     )
     before = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
     m = cat._manifest("ns", "t", cat._current_sid("ns", "t"))
-    assert len(
-        [e for e in m["deletes"] if e.get("mode") in ("positional", "dv")]
-    ) == 3
+    src = [e for e in m["deletes"] if e.get("mode") == "dv"]
+    assert [e["layout"] for e in src] == ["ranges", "positions", "ranges"]
 
     sid = cat.rewrite_deletes_to_dv(spark, "ns", "t")
     m = cat._manifest("ns", "t", sid)
     dv_entries = [e for e in m["deletes"] if e.get("mode") == "dv"]
     assert len(dv_entries) == 1, "one DV for all path-scoped entries"
-    assert not any(e.get("mode") == "positional" for e in m["deletes"])
     assert len([e for e in m["deletes"] if "key_cols" in e]) == 1
     after = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
     assert after == before
     # a lone DV is already the target shape: no-op
     assert cat.rewrite_deletes_to_dv(spark, "ns", "t") == sid
-    # merged DV masks exactly the live doomed addresses — this
-    # fixture's doomed sets are contiguous key bands, so the fold
-    # stores the r15 ranges layout (runs-sized bytes) and the check
-    # expands it layout-agnostically
-    assert dv_entries[0].get("layout") == "ranges"
+    # merged DV masks exactly the live doomed addresses (the check
+    # expands the folded entry layout-agnostically)
     merged = spark.read.parquet(
         os.path.join(wh, "ns", "t", "deletes", dv_entries[0]["dir"])
     )
     n_live = len(
         [r for r in addr
-         if r["o_orderkey"] < 100 or 1000 <= r["o_orderkey"] < 1100]
+         if r["o_orderkey"] < 100 or 1000 <= r["o_orderkey"] < 1100
+         or (100 <= r["o_orderkey"] < 800 and r["o_orderkey"] % 37 == 0)]
     )
     assert (
         SnapCatalog._dv_positions_relation(
@@ -2986,7 +2864,7 @@ def test_rewrite_deletes_to_dv_drops_dead_addresses(
     spark, sf_dir, tmp_path
 ):
     """Addresses into a CoW-rewritten dir are dead and must not survive
-    into the folded DV (mirror of the positional dead-address pin)."""
+    into the folded DV; addresses under live dirs all survive."""
     wh = str(tmp_path / "wh")
     cat = SnapCatalog(wh)
     o = load_table(spark, sf_dir, "orders").select(
@@ -3013,7 +2891,9 @@ def test_rewrite_deletes_to_dv_drops_dead_addresses(
     cat.delete_positions_dv(
         spark, "ns", "t", pos_df(set(range(0, 50)) | set(range(1000, 1050)))
     )
-    cat.delete_positions(spark, "ns", "t", pos_df(set(range(50, 80))))
+    cat.delete_positions_dv(spark, "ns", "t", pos_df(set(range(50, 80))))
+    # CoW-rewrite the second dir: its pending deletes materialize and the
+    # dir leaves the manifest — its addresses are now dead
     cat.delete_where(spark, "ns", "t", "o_orderkey >= 1200")
     before = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
 
@@ -3025,9 +2905,7 @@ def test_rewrite_deletes_to_dv_drops_dead_addresses(
     )
     live_keys = {r["o_orderkey"] for r in addr if r["o_orderkey"] < 80}
     assert (
-        SnapCatalog._dv_positions_relation(
-            merged, entry.get("layout", "positions")
-        ).count()
+        SnapCatalog._dv_positions_relation(merged, entry["layout"]).count()
         == len(live_keys)
     ), "dead second-dir addresses dropped"
     after = sorted(tuple(r) for r in cat.read(spark, "ns", "t").collect())
@@ -3035,10 +2913,10 @@ def test_rewrite_deletes_to_dv_drops_dead_addresses(
 
 
 def test_compact_manifests_never_folds_dv_dirs(spark, sf_dir, tmp_path):
-    """Dirs covered by a DV entry are path-scoped exactly like
-    positional ones: compact_manifests must carry them as-is (folding
-    hard-links files under new basenames, orphaning the stored
-    addresses) while still folding uncovered dirs."""
+    """Dirs covered by a DV entry are path-scoped: compact_manifests
+    must carry them as-is (folding hard-links files under new
+    basenames, orphaning the stored addresses) while still folding
+    uncovered dirs."""
     wh = str(tmp_path / "wh")
     cat = SnapCatalog(wh)
     o = load_table(spark, sf_dir, "orders").select(
@@ -3152,7 +3030,7 @@ def test_delete_where_mor_dv(spark, sf_dir, tmp_path):
     data rewrite, stats-pruned addressing scan, read masks exactly the
     matching rows, later appends unmasked, pending-delete refusal, and
     compact() materializes. Completes the delete matrix: CoW predicate
-    / MoR equality / MoR positional / MoR DV / MoR predicate-DV."""
+    / MoR equality / MoR address-DV / MoR predicate-DV."""
     import pytest
 
     wh = str(tmp_path / "wh")
@@ -3439,7 +3317,7 @@ def test_rewrite_to_dv_fold_write_parallelism(spark, sf_dir, tmp_path,
         cat = SnapCatalog(path)
         cat.create_or_replace("ns", "t", o.repartition(4))
         addressed = cat.read_with_positions(spark, "ns", "t")
-        cat.delete_positions(
+        cat.delete_positions_dv(
             spark, "ns", "t",
             addressed.filter("o_orderkey % 5 = 0").select(
                 cat.POS_FILE_COL, cat.POS_IDX_COL
@@ -3458,7 +3336,7 @@ def test_rewrite_to_dv_fold_write_parallelism(spark, sf_dir, tmp_path,
             "ns", "t", cat._current_sid("ns", "t")
         )["deletes"]
         assert entry["mode"] == "dv"
-        assert entry["n_positions"] > 0  # gate stats still stamped
+        assert entry["n_positions"] > 0  # plan stats still stamped
         return glob.glob(
             os.path.join(cat.warehouse, "ns", "t", "deletes",
                          entry["dir"], "*.parquet")
@@ -3474,9 +3352,12 @@ def test_rewrite_to_dv_fold_write_parallelism(spark, sf_dir, tmp_path,
     assert len(dv_files(cat)) == 1
     assert cat.read(spark, "ns", "t").count() == want
 
-    # large backlog (threshold forced under the fixture's volume):
-    # the fold fans out to multiple write tasks
+    # large scattered backlog (threshold forced under the fixture's
+    # volume; a zero run cap keeps the fold off the single-file ranges
+    # layout, whose run caps this dense fixture fits at test SF): the
+    # fold fans out to multiple write tasks
     monkeypatch.setattr(SnapCatalog, "DV_FOLD_POSITIONS_PER_TASK", 50)
+    monkeypatch.setattr(SnapCatalog, "DV_RANGE_PROBE_MAX_PER_FILE", 0)
     cat = build(str(tmp_path / "wh_dense"))
     cat.rewrite_deletes_to_dv(spark, "ns", "t")
     assert len(dv_files(cat)) > 1, "large fold must not serialize"
@@ -3617,14 +3498,14 @@ def test_auto_dispatch_footer_proof_noop_zero_scans(spark, sf_dir, tmp_path):
 
 
 def test_dv_ranges_storage_layout(spark, tmp_path):
-    """r15 range-compressed DV STORAGE (the Iceberg-v3 roaring-bitmap
+    """Range-compressed DV STORAGE (the Iceberg-v3 roaring-bitmap
     analogue): a contiguous band delete stores (file_path, starts,
-    ends) directly — entry ``layout: "ranges"``, runs-sized bytes, no
-    ``positions`` column on disk — and the read broadcasts the stored
-    file with NO derivation pass (no MapInPandas node in the plan,
-    where a positions-layout entry routed to the ranges apply pays
-    one). A scattered delete on the same code path keeps the explicit
-    ordinal layout. Compaction materializes the ranges entry exactly."""
+    ends) directly — entry ``layout: "ranges"``, ``apply: "ranges"``,
+    runs-sized bytes, no ``positions`` column on disk — and the read
+    broadcasts the stored file with NO derivation pass (no MapInPandas
+    node in the plan). A scattered delete on the same code path keeps
+    the explicit ordinal layout and the probe plan. Compaction
+    materializes the ranges entry exactly."""
     import pyarrow.parquet as pq
 
     ids = spark.range(20_000).select(
@@ -3646,7 +3527,7 @@ def test_dv_ranges_storage_layout(spark, tmp_path):
         (entry,) = cat._manifest(
             "ns", "t", cat._current_sid("ns", "t")
         )["deletes"]
-        assert entry["layout"] == "ranges"
+        assert entry["layout"] == "ranges" and entry["apply"] == "ranges"
         assert entry["n_positions"] == 6000
         assert entry["n_ranges"] <= 4  # one run per touched file
         dv_dir = os.path.join(
@@ -3693,6 +3574,7 @@ def test_dv_ranges_storage_layout(spark, tmp_path):
             "ns", "t", cat2._current_sid("ns", "t")
         )["deletes"]
         assert entry2["layout"] == "positions"
+        assert entry2["apply"] == "probe"
         assert cat2.read(spark, "ns", "t").count() == 20_000 - (
             20_000 // 97 + 1
         )
@@ -3726,7 +3608,8 @@ def test_dv_write_entry_fans_out_large_scattered(spark, tmp_path,
     (entry,) = cat._manifest(
         "ns", "t", cat._current_sid("ns", "t")
     )["deletes"]
-    assert entry["layout"] == "positions"  # scattered: no compression
+    # dense and scattered: no compression, anti-join apply
+    assert entry["layout"] == "positions" and entry["apply"] == "anti"
     dv_dir = os.path.join(
         str(tmp_path / "wh"), "ns", "t", "deletes", entry["dir"]
     )

@@ -282,9 +282,23 @@ def test_incremental_screen_one_commit_per_epoch_and_subshingle(
     import glob as _glob
     import os as _os
 
-    for d in _glob.glob(str(tmp_path / "wh" / "stream" / "seen" / "data" / "*")):
+    data_glob = str(tmp_path / "wh" / "stream" / "seen" / "data" / "*")
+    for d in _glob.glob(data_glob):
         n_parts = len(_glob.glob(_os.path.join(d, "part-*.parquet")))
         assert n_parts <= 2, (d, n_parts)
+
+    # a wider, shuffle-sourced input (8 partitions) bounds its commit
+    # by that width too
+    before = set(_glob.glob(data_glob))
+    b2 = spark.createDataFrame(
+        [(10 + i, f"doc {i} with several distinct words here {i}")
+         for i in range(16)],
+        "doc_id long, text string",
+    ).repartition(8)
+    SE.screen_batch_incremental(cat, b2)
+    (new_dir,) = set(_glob.glob(data_glob)) - before
+    n_parts = len(_glob.glob(_os.path.join(new_dir, "part-*.parquet")))
+    assert 1 <= n_parts <= 8, (new_dir, n_parts)
 
 
 def test_run_concurrently_order_and_errors():
