@@ -749,20 +749,10 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    # scope shuffle width to the staged batch volume: the screen's joins
-    # and aggregations are batch-sized (maxFilesPerTrigger=1), so the
-    # session's cluster-width constant only multiplies per-task
-    # scheduling overhead here (r15 profile: ~100 stages/run of 32-64
-    # near-empty tasks); at real volumes state_scope returns the session
-    # default unchanged. foreachBatch has no state store, so results are
-    # partition-count independent.
-    # fixed_plan_scope: the screen's per-epoch plan is huge (2×K md5
-    # signature lanes) while its data is batch-sized, so AQE's per-stage
-    # replanning dominates the epoch wall (~30 stage-jobs/batch; measured
-    # 8.5→6.7 s median) — disabled below the staged-bytes gate, no-op at
-    # real scale exactly like state_scope
-    with SE.state_scope(spark, stage), SE.fixed_plan_scope(spark, stage):
-        SE.stream_incremental_dedup(docs, cat)
+    # each epoch sizes its own shuffle width and AQE gate from its
+    # micro-batch's estimated bytes (screen_batch_incremental), so the
+    # caller sets no scope
+    SE.stream_incremental_dedup(docs, cat)
     # the admitted relation is a verdict-column filter over the single
     # wide seen store (r16: one commit per epoch instead of two) —
     # column pruning reads only doc_id + the flag here

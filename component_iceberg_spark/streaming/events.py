@@ -140,7 +140,7 @@ def scaled_state_partitions(
 
 
 def fixed_plan_scope(
-    spark: SparkSession, src: str | int, threshold_bytes: int = 64 << 20
+    spark: SparkSession, input_bytes: int, threshold_bytes: int = 64 << 20
 ):
     """Scoped AQE bypass for a bounded BATCH-SIZED multi-stage pipeline
     (guide §1.2 step 3 — config only after the algorithm is right, and
@@ -150,16 +150,21 @@ def fixed_plan_scope(
     optimizer on the remaining plan after each one — driver work
     proportional to PLAN size, paid per stage regardless of data size.
     The incremental dedup screen's plan is huge (2×K md5 signature
-    lanes, banded joins, anti-joins: ~30 stage-jobs per micro-batch)
-    while its per-epoch data is batch-sized, so replanning dominates:
-    measured 8.5→6.7 s median over interleaved process-isolated
-    best-of-3 at sf0.1, identical results (AQE is physical-only).
-    AQE's actual benefits — partition coalescing and skew splitting —
-    need data-sized shuffles, and the screen's shuffle width is already
-    pinned by :func:`state_scope`.
+    lanes, banded joins, anti-joins) while its per-epoch data is
+    batch-sized, so replanning dominates. Median append-epoch screen
+    wall on a 4-core VM (``perfbench`` ``llm_curate`` inputs, seed 201,
+    9 epochs each): 5.27 s at the session width with AQE on, 4.06 s
+    with AQE off alone, 4.15 s with the narrow :func:`state_scope`
+    width alone, 2.84 s with both (37–40 stage-jobs → 13 jobs) — the
+    gate still pays on top of the width. AQE is physical-only, so
+    results are identical; its actual benefits — partition coalescing
+    and skew splitting — need data-sized shuffles.
 
-    Gated on the staged source's bytes: below ``threshold_bytes`` the
-    scope disables AQE, at-or-above (or when the size is unknowable) it
+    Gated on the pipeline's input bytes (for the screen: Catalyst's
+    size estimate of the epoch's batch, see
+    :func:`screen_batch_incremental`): below ``threshold_bytes`` the
+    scope disables AQE, at-or-above — which includes Spark's
+    ``Long.MaxValue`` "cannot size this input" estimate — or at zero it
     is a NO-OP, so at real scale the session's AQE policy stands
     untouched — the same no-op-at-scale construction as
     ``scaled_state_partitions``."""
@@ -167,8 +172,7 @@ def fixed_plan_scope(
 
     from component_iceberg_spark.session import scoped_conf
 
-    b = src if isinstance(src, int) else dir_bytes(src)
-    if b <= 0 or b >= threshold_bytes:
+    if input_bytes <= 0 or input_bytes >= threshold_bytes:
         return nullcontext(spark)
     return scoped_conf(spark, **{"spark.sql.adaptive.enabled": "false"})
 
@@ -192,7 +196,14 @@ def state_scope(spark: SparkSession, src: str | int, floor: int = 8):
     evidence: ~1 s addBatch per 4-row sentinel batch at 8 partitions,
     halved at 4, ~600 ms commit still dominating at 4, ~10% more off
     at 2; floor 1 over-serializes the first real batch's join —
-    measured worse; same results at every width)."""
+    measured worse; same results at every width).
+
+    :func:`screen_batch_incremental` also runs each epoch inside this
+    scope, keyed on the epoch batch's Catalyst size estimate: a
+    foreachBatch epoch has no state store, but its shuffles are
+    batch-sized for the same reason, and an unsizable input (estimate
+    ``Long.MaxValue``) scales to the session width, i.e. is left as
+    the session set it."""
     from component_iceberg_spark.session import scoped_conf
 
     n = scaled_state_partitions(
@@ -480,12 +491,57 @@ def admitted_docs(
     return seen.filter(F.col(ADMIT_COL)).drop(*sig_cols, ADMIT_COL)
 
 
+def estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (its optimized plan's
+    ``sizeInBytes``; planning only, no Spark job). File-sourced plans —
+    a parquet read, a file-stream micro-batch — report their files'
+    bytes; a plan Spark cannot size (e.g. a ``createDataFrame`` list,
+    an RDD) reports ``Long.MaxValue``."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
 def screen_batch_incremental(
     catalog,
     batch: DataFrame,
     namespace: str = "stream",
     seen_table: str = "seen",
     threshold: float = 0.8,
+) -> dict:
+    """Screen one epoch (see :func:`_screen_epoch` for the drop rule and
+    the one-commit / replay contracts) with its execution sized to the
+    epoch's OWN input: the batch's Catalyst size estimate keys
+    :func:`state_scope` (shuffle width) and :func:`fixed_plan_scope`
+    (AQE off below 64 MB) around the whole epoch, so every caller — a
+    ``foreachBatch`` stream or a direct per-batch loop — gets the
+    batch-sized plan, and both session confs are restored on exit, also
+    when the epoch raises. At or above the gate AQE stays as the
+    session set it, and the width keeps scaling with the estimate up to
+    the session's, so 100 TB epochs — and unsizable ones, whose
+    estimate is ``Long.MaxValue`` — run under the cluster's policy.
+
+    Returns the epoch's execution choice as a driver-side dict (no
+    Spark job): ``est_bytes`` (the estimate), ``shuffle_partitions``
+    and ``adaptive`` (the confs the epoch ran under)."""
+    spark = batch.sparkSession
+    est = estimated_bytes(batch)
+    with state_scope(spark, est), fixed_plan_scope(spark, est):
+        choice = {
+            "est_bytes": est,
+            "shuffle_partitions": int(
+                spark.conf.get("spark.sql.shuffle.partitions")
+            ),
+            "adaptive": spark.conf.get("spark.sql.adaptive.enabled"),
+        }
+        _screen_epoch(catalog, batch, namespace, seen_table, threshold)
+    return choice
+
+
+def _screen_epoch(
+    catalog,
+    batch: DataFrame,
+    namespace: str,
+    seen_table: str,
+    threshold: float,
 ) -> None:
     """One micro-batch of the incremental near-dup screen — REPLAY-
     IDEMPOTENT, and ONE COMMIT per epoch (r16; guide §1.2/§6 — the

@@ -8,6 +8,9 @@ from component_iceberg_spark.io.snaptable import SnapCatalog
 from component_iceberg_spark.io.tables import load_table
 from component_iceberg_spark.streaming import events as SE
 
+#: Catalyst's sizeInBytes for a plan it cannot size (Long.MaxValue)
+UNKNOWN_EST = (1 << 63) - 1
+
 
 def test_session_window_closed_sessions_match_batch_twin(spark, sf_dir):
     """The streaming session_window query emits exactly the sessions that
@@ -805,11 +808,119 @@ def test_fixed_plan_scope_gates_on_input_bytes(spark):
     # at/above the gate: no-op
     with SE.fixed_plan_scope(spark, 64 << 20):
         assert spark.conf.get(key) == before
-    # unknown volume (0 / missing dir): no-op — never degrade at scale
+    # unknown volume (0 / Catalyst's Long.MaxValue "cannot size this
+    # input" estimate): no-op — never degrade at scale
     with SE.fixed_plan_scope(spark, 0):
         assert spark.conf.get(key) == before
-    with SE.fixed_plan_scope(spark, "/nonexistent-dir-xyz"):
+    with SE.fixed_plan_scope(spark, UNKNOWN_EST):
         assert spark.conf.get(key) == before
+
+
+_SCREEN_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+
+
+def _confs(spark):
+    return {k: spark.conf.get(k) for k in _SCREEN_CONFS}
+
+
+def _parquet_batch(spark, sf_dir, path, residue):
+    """A file-sourced epoch batch: one third of the documents fixture
+    written to ``path`` and read back, with its files' total bytes."""
+    import glob as _glob
+    import os as _os
+
+    from pyspark.sql import functions as F
+
+    load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % 3 == residue
+    ).write.parquet(str(path))
+    nbytes = sum(
+        _os.path.getsize(f) for f in _glob.glob(str(path / "*.parquet"))
+    )
+    return spark.read.parquet(str(path)), nbytes
+
+
+def test_screen_epoch_sizes_itself_from_batch_estimate(
+    spark, sf_dir, tmp_path
+):
+    """A small parquet-sourced epoch runs at the scaled shuffle width
+    with AQE off — keyed on Catalyst's estimate, which for a parquet
+    read is its files' bytes — reports that choice, and leaves the
+    session's (wider, AQE-on) confs restored afterwards."""
+    from component_iceberg_spark.session import scoped_conf
+
+    batch, nbytes = _parquet_batch(spark, sf_dir, tmp_path / "b0", 0)
+    assert 0 < nbytes < 64 << 20
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "32"}):
+        before = _confs(spark)
+        assert before["spark.sql.adaptive.enabled"] == "true"
+        rec = SE.screen_batch_incremental(cat, batch)
+        assert _confs(spark) == before
+    assert rec == {
+        "est_bytes": nbytes,
+        "shuffle_partitions": 8,
+        "adaptive": "false",
+    }, rec
+
+
+def test_screen_epoch_unknown_estimate_keeps_session_confs(spark, tmp_path):
+    """An epoch Spark cannot size (a ``createDataFrame`` list estimates
+    ``Long.MaxValue``) runs under the session's own width and AQE, and
+    the record says so — the 100 TB side of the gate."""
+    from component_iceberg_spark.session import scoped_conf
+
+    batch = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    assert SE.estimated_bytes(batch) == UNKNOWN_EST
+    cat = SnapCatalog(str(tmp_path / "wh"))
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "32"}):
+        before = _confs(spark)
+        rec = SE.screen_batch_incremental(cat, batch)
+        assert _confs(spark) == before
+    assert rec == {
+        "est_bytes": UNKNOWN_EST,
+        "shuffle_partitions": 32,
+        "adaptive": before["spark.sql.adaptive.enabled"],
+    }, rec
+
+
+def test_screen_epoch_restores_confs_when_epoch_raises(
+    spark, sf_dir, tmp_path
+):
+    """Both confs are restored when the epoch fails inside its scope:
+    the second epoch's append (running at the narrowed width, AQE off)
+    raises, the session is back to its own confs, and the failed epoch
+    published nothing."""
+    import pytest
+
+    from component_iceberg_spark.session import scoped_conf
+
+    b0, _ = _parquet_batch(spark, sf_dir, tmp_path / "b0", 0)
+    b1, _ = _parquet_batch(spark, sf_dir, tmp_path / "b1", 1)
+    wh = str(tmp_path / "wh")
+    seen_in_append = []
+
+    class FailingAppend(SnapCatalog):
+        def append(self, *args, **kwargs):
+            seen_in_append.append(_confs(spark))
+            raise RuntimeError("append failed")
+
+    with scoped_conf(spark, **{"spark.sql.shuffle.partitions": "32"}):
+        before = _confs(spark)
+        SE.screen_batch_incremental(SnapCatalog(wh), b0)
+        with pytest.raises(RuntimeError, match="append failed"):
+            SE.screen_batch_incremental(FailingAppend(wh), b1)
+        assert _confs(spark) == before
+    assert seen_in_append == [
+        {
+            "spark.sql.shuffle.partitions": "8",
+            "spark.sql.adaptive.enabled": "false",
+        }
+    ]
+    assert len(SnapCatalog(wh)._snapshots("stream", "seen")) == 1
 
 
 def test_state_scope_sets_and_restores_shuffle_conf(spark, tmp_path):
